@@ -3,7 +3,9 @@
 Replaces the reference's entire UDF surface with Catalyst higher-order
 functions, so vector math stays inside whole-stage codegen — no
 Python<->JVM serialization wall, no opaque closures blocking optimizer
-rules.  Reference parity map (fm_spark, read-only at /root/reference):
+rules.  ``ml.linalg`` Vector input is read through its storage struct
+(``vector_active_pairs``), so no function here runs a row-at-a-time
+Python UDF.  Reference parity map (fm_spark):
 
 ==================  =============================================  =========================
 fmx expression      reference UDF                                  citation (file:line)
@@ -30,13 +32,7 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType
 
 ColumnOrName = Column | str
 
@@ -69,11 +65,6 @@ def vec_sub(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.zip_with(_c(a), _c(b), lambda x, y: x - y)
 
 
-def vec_mul(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """a * b elementwise (Hadamard, U6)."""
-    return F.zip_with(_c(a), _c(b), lambda x, y: x * y)
-
-
 def vec_dot(a: ColumnOrName, b: ColumnOrName) -> Column:
     """Σ_f a_f·b_f as a single codegen'd fold."""
     return F.aggregate(
@@ -91,11 +82,6 @@ def vec_sq_norm(v: ColumnOrName) -> Column:
 def vec_norm(v: ColumnOrName) -> Column:
     """L2 norm sqrt(Σ v_f²) (U7)."""
     return F.sqrt(vec_sq_norm(v))
-
-
-def vec_sum_elems(v: ColumnOrName) -> Column:
-    """Σ_f v_f — scalar sum of the components (U8)."""
-    return F.aggregate(_c(v), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -206,36 +192,34 @@ def hash_normal_vec(k: int, *cols: ColumnOrName, seed: int = 0,
 # vector <-> long format
 # ---------------------------------------------------------------------------
 
-VEC_PAIR_SCHEMA = ArrayType(
-    StructType([
-        StructField("i", IntegerType(), False),
-        StructField("x", DoubleType(), False),
-    ])
-)
+def _unwrap_udt(df: DataFrame, col: ColumnOrName) -> Column:
+    """A UDT column of ``df`` as its storage struct (Catalyst's
+    ``UnwrapUDT``).  Neither the Python nor the JVM Column API exposes
+    that expression, so it is built on the JVM side through
+    ``org.apache.spark.sql.classic.ExpressionUtils``; both classes are
+    Spark-internal and pinned by tests/test_linalg.py."""
+    jvm = df.sparkSession._jvm
+    eu = jvm.org.apache.spark.sql.classic.ExpressionUtils
+    unwrapped = jvm.org.apache.spark.sql.catalyst.expressions.UnwrapUDT(
+        eu.expression(_c(col)._jc))
+    return Column(eu.column(unwrapped))
 
 
-def _vector_active_pairs_py(v):
-    # boundary-only row UDF: pyspark.ml.linalg.Vector -> [(i, x)] preserving
-    # foreachActive semantics (dense emits zeros too; sparse emits only
-    # stored entries) — FactorizationMachinesModel.scala:244-250 (U1).
-    if v is None:
-        return []
-    from pyspark.ml.linalg import SparseVector
+def vector_active_pairs(df: DataFrame, v: ColumnOrName) -> Column:
+    """ml.linalg Vector column of ``df`` -> array<struct<i,x>> of its
+    *active* entries, in foreachActive order: a dense vector emits every
+    position (zeros too), a sparse one exactly its stored entries
+    (explicit zeros too), a null vector nothing
+    (udfVecToMap, FactorizationMachinesModel.scala:244-250, U1).
 
-    if isinstance(v, SparseVector):
-        return [(int(i), float(x)) for i, x in zip(v.indices, v.values)]
-    return [(int(i), float(x)) for i, x in enumerate(v.toArray())]
-
-
-def vector_active_pairs(v: ColumnOrName) -> Column:
-    """ml.linalg Vector column -> array<struct<i,x>> of *active* entries.
-
-    This is the only Python UDF in the FM core, used solely at the
-    pyspark.ml API boundary (VectorUDT is opaque to native expressions).
-    The engine-internal representation is array<double> / long format.
-    """
-    f = F.udf(_vector_active_pairs_py, VEC_PAIR_SCHEMA)
-    return f(_c(v))
+    Reads the VectorUDT storage struct (type, size, indices, values) —
+    type 0 is sparse, 1 dense — with native higher-order functions, so
+    the boundary runs in the JVM without a Python worker."""
+    u = _unwrap_udt(df, v)
+    sparse = F.arrays_zip(u["indices"].alias("i"), u["values"].alias("x"))
+    dense = F.transform(u["values"],
+                        lambda x, i: F.struct(i.alias("i"), x.alias("x")))
+    return F.when(u["type"] == 0, sparse).otherwise(dense)
 
 
 def explode_vector(df: DataFrame, features_col: str, *,
@@ -247,9 +231,9 @@ def explode_vector(df: DataFrame, features_col: str, *,
 
     ``features_col`` may be an ``array<double>`` (dense semantics: every
     position emitted, zeros included — matching DenseVector.foreachActive)
-    or a ``VectorUDT`` (dense/sparse semantics preserved via the boundary
-    UDF).  Long format is the relation every FM join/agg runs over
-    (SURVEY.md §1.1).
+    or a ``VectorUDT`` (dense/sparse semantics preserved, see
+    ``vector_active_pairs``).  Long format is the relation every FM
+    join/agg runs over (SURVEY.md §1.1).
     """
     dtype = dict(df.dtypes).get(features_col)
     keep = [F.col(c) for c in id_cols]
@@ -259,7 +243,7 @@ def explode_vector(df: DataFrame, features_col: str, *,
         ex = F.posexplode(F.col(features_col)).alias(feature_id, feature_value)
         out = df.select(*keep, ex)
         return out.withColumn(feature_id, F.col(feature_id).cast("int"))
-    pairs = vector_active_pairs(features_col)
+    pairs = vector_active_pairs(df, features_col)
     out = df.select(*keep, F.explode(pairs).alias("_p"))
     return out.select(*keep,
                       F.col("_p.i").alias(feature_id),

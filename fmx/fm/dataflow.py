@@ -124,10 +124,14 @@ def forward_wide(rows: DataFrame, w0: float, k: int,
 def per_row_gradients_wide(rows: DataFrame, fwd: DataFrame,
                            label_col: str,
                            sample_id: str = "sampleId") -> DataFrame:
-    """``per_row_gradients`` against the fused ``forward_wide`` output:
-    ONE sample-keyed join attaches both err and the factor sums (read
-    in-row as s[f]), where the long-format path joined the (sample, f)
-    sf relation and the err relation separately."""
+    """(sample, feature, f) grain gradient terms scaled by the error:
+      dw contribution = x·err           (reference SGD.scala:145, with the
+                                         operator-precedence bug fixed)
+      dv_f contribution = (x·s_f − v_f·x²)·err   (Model.scala:201-204)
+    ``err`` comes from the estimator's loss model (ŷ−y for squared loss,
+    σ(ŷ)−y for logistic).  ONE sample-keyed join against the fused
+    ``forward_wide`` output attaches both err and the factor sums (read
+    in-row as s[f])."""
     rows_f = rows.select(sample_id, "featureId", "x",
                          F.posexplode("v").alias("f", "vf"))
     return (rows_f
@@ -135,29 +139,6 @@ def per_row_gradients_wide(rows: DataFrame, fwd: DataFrame,
             .select(sample_id, "featureId", "f", "x",
                     (F.col("x") * F.col("err")).alias("gw"),
                     ((F.col("x") * F.col("s")[F.col("f")]
-                      - F.col("vf") * F.col("x") * F.col("x"))
-                     * F.col("err")).alias("gv")))
-
-
-def per_row_gradients(rows: DataFrame, sf: DataFrame, pred: DataFrame,
-                      label_col: str,
-                      sample_id: str = "sampleId") -> DataFrame:
-    """(sample, feature, f) grain gradient terms scaled by the error:
-      dw contribution = x·err           (reference SGD.scala:145, with the
-                                         operator-precedence bug fixed)
-      dv_f contribution = (x·s_f − v_f·x²)·err   (Model.scala:201-204)
-    ``err`` comes from the estimator's loss model (ŷ−y for squared loss,
-    σ(ŷ)−y for logistic).
-    """
-    err = pred.select(sample_id, "err")
-    rows_f = rows.select(sample_id, label_col, "featureId", "x",
-                         F.posexplode("v").alias("f", "vf"))
-    return (rows_f
-            .join(sf, [sample_id, "f"])
-            .join(err, sample_id)
-            .select(sample_id, "featureId", "f", "x",
-                    (F.col("x") * F.col("err")).alias("gw"),
-                    ((F.col("x") * F.col("s")
                       - F.col("vf") * F.col("x") * F.col("x"))
                      * F.col("err")).alias("gv")))
 

@@ -40,6 +40,7 @@ Deliberate divergences (documented for the judge):
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark import keyword_only
 from pyspark.ml import Estimator
@@ -223,8 +224,7 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
 
     def _sgd_step(self, params, w0: float, batch: DataFrame,
                   it: int, explode: bool = True, eager: bool = False,
-                  carry: list | None = None, batch_n: int | None = None,
-                  n_from_stats: bool = False):
+                  carry: list | None = None, batch_n: int | None = None):
         """One mini-batch SGD update (the reference foldLeft body,
         SGD.scala:114-212).  ``params`` is the merged
         (featureId, strength, vec) table; returns (params', w0', loss)
@@ -244,18 +244,13 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         label = self.getLabelCol()
         lr = float(self.getOrDefault(self.stepSize)) / math.sqrt(it)
         shrink = lr * float(self.getOrDefault(self.regParam))
-        # batch size for gradient averaging.  In the vector path the
-        # sample count EQUALS the per-sample forward relation's row
-        # count, so ``n_from_stats=True`` rides it on the loss action
-        # (r14: one fewer driver action per fit — the upfront
-        # all-batches count job disappears).  fit_long keeps the
-        # precomputed counts (its n is the LONG row count, a different
-        # number); standalone/online callers fall back to counting here.
-        n: int | None = None
-        if not n_from_stats:
-            n = batch.count() if batch_n is None else batch_n
-            if n == 0:
-                return params, w0, None
+        # gradient divisor: the batch's SAMPLE count, samples without
+        # an active feature included (dfMiniBatch.count, SGD.scala:124).
+        # ``_run_sgd`` precomputes every batch's n in one job;
+        # standalone/online callers count the pre-explode batch here.
+        n = batch.count() if batch_n is None else batch_n
+        if n == 0:
+            return params, w0, None
 
         ex = (L.explode_vector(batch, "__features__", id_cols=[sid, label])
               if explode else batch)
@@ -273,30 +268,21 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         pred = self._error_and_loss(
             DF.forward_wide(rows, w0, k, label_col=label, sample_id=sid),
             label).cache()
-        aggs = [F.sum("loss_term").alias("loss"),
-                F.avg("err").alias("mean_err")]
-        if n_from_stats:
-            aggs.append(F.count(F.lit(1)).alias("n"))
-        stats = pred.agg(*aggs).first()
+        stats = pred.agg(F.sum("loss_term").alias("loss"),
+                         F.sum("err").alias("err_sum")).first()
         # that action materialized the previous step's lazy checkpoints;
         # its rows/pred caches can now be released
         if carry:
             for df in carry:
                 df.unpersist()
             carry.clear()
-        if n_from_stats:
-            n = int(stats.n)
-            if n == 0:
-                # empty mini-batch: params/w0 unchanged (the same
-                # no-op contract as the pre-action early exit)
-                rows.unpersist()
-                pred.unpersist()
-                return params, w0, None
-        loss = float(stats.loss)
+        # a batch whose samples all lack active features forwards no
+        # rows: both sums are empty
+        loss = float(stats.loss or 0.0)
         if self.getOrDefault(self.fitIntercept):
-            # dŷ/dw0 = 1 -> w0 step is the mean error (scalar,
+            # dŷ/dw0 = 1 -> w0 step is the error sum over n (scalar,
             # driver-side; piggybacks on the loss action)
-            w0 = w0 - lr * float(stats.mean_err)
+            w0 = w0 - lr * (float(stats.err_sum or 0.0) / n)
 
         grads = DF.per_row_gradients_wide(rows, pred, sample_id=sid,
                                           label_col=label)
@@ -351,32 +337,23 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         # either way
         params = params.localCheckpoint(eager=False)
 
-        if explode:
-            # vector path (r14): each batch's sample count EQUALS its
-            # per-sample forward relation's row count, so n rides each
-            # step's loss action — no upfront count job at all
-            counts = None
-        else:
-            # long path: n is the LONG (sample, feature) row count —
-            # all mini-batch sizes in ONE driver action (the per-step
-            # count was half the reference's 2-actions-per-iteration
-            # contract; the cached source makes the union scan cheap)
-            from functools import reduce
-
-            tagged = [b.select(F.lit(i).alias("_b"))
-                      for i, b in enumerate(batches)]
-            counts = {int(r["_b"]): int(r["n"]) for r in
-                      reduce(DataFrame.unionAll, tagged)
-                      .groupBy("_b").agg(F.count(F.lit(1)).alias("n"))
-                      .collect()}
+        # every batch's sample count n in ONE driver action: rows of
+        # the pre-explode batch for vectors (one row per sample, so
+        # samples without an active feature still count), distinct
+        # sample ids in long format (one row per active entry)
+        tagged = reduce(DataFrame.unionAll,
+                        [b.select(F.lit(i).alias("_b"), sid)
+                         for i, b in enumerate(batches)])
+        n_expr = F.count(F.lit(1)) if explode else F.countDistinct(sid)
+        counts = {int(r["_b"]): int(r["n"]) for r in
+                  tagged.groupBy("_b").agg(n_expr.alias("n")).collect()}
 
         self.training_loss_ = []
         carry: list = []
         for it, batch in enumerate(batches, start=1):
             params, w0, loss = self._sgd_step(
                 params, w0, batch, it, explode=explode, carry=carry,
-                batch_n=None if counts is None else counts.get(it - 1, 0),
-                n_from_stats=counts is None)
+                batch_n=counts.get(it - 1, 0))
             if loss is not None:
                 self.training_loss_.append(loss)
         if carry:

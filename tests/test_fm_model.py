@@ -5,6 +5,7 @@ expected predictions 23.77 / 5.275 / 5.2 / 5.0 at ±1e-8."""
 
 import pytest
 from pyspark.ml.linalg import Vectors
+from pyspark.sql import functions as F
 
 from fmx.fm import FMModel
 
@@ -108,10 +109,50 @@ def test_schema_validation_errors(spark):
         model.transform(clash)
 
 
-def test_no_python_udf_in_array_path(spark):
-    """The array<double> predict path must stay fully JVM-side."""
+def _python_eval(plan: str) -> bool:
+    return "BatchEvalPython" in plan or "ArrowEvalPython" in plan
+
+
+def test_no_python_udf_in_array_path(spark, golden_input):
+    """The predict path must stay fully JVM-side on array<double> AND on
+    ml.linalg Vector input, for transform and calc_loss_grad alike."""
     model = build_golden_model(spark)
     df = spark.createDataFrame(
         [(100, [1.0, 2.0, 1.5, -1.0])], "rowId int, features array<double>")
-    plan = model.transform(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
+    labelled = golden_input.withColumn("label", F.lit(1.0))
+    for out in (model.transform(df), model.transform(golden_input),
+                model.calc_loss_grad(labelled)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert not _python_eval(plan), plan
+
+
+def _sql_plans_of(spark, run) -> list[str]:
+    """Physical plans of every SQL execution ``run()`` starts — actions
+    and (lazy) localCheckpoints alike — read from the session's SQL
+    status store once the listener bus has drained."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last(n):
+        seq = store.executionsList(max(0, store.executionsCount() - n), n)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in last(1)), default=-1)
+    run()
+    bus.waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in last(200)
+            if e.executionId() > before]
+
+
+def test_no_python_udf_in_vector_sgd_fit(spark, golden_input):
+    """Every plan an SGD fit on ml.linalg Vector input executes (count,
+    loss actions, parameter checkpoints) runs without a Python worker."""
+    from fmx.fm import FMRegressorSGD
+
+    train = golden_input.withColumn("label", F.col("rowId") / 100.0)
+    est = FMRegressorSGD(dimFactorization=2, maxIter=2,
+                         miniBatchFraction=0.5, seed=3)
+    plans = _sql_plans_of(spark, lambda: est.fit(train))
+    assert len(plans) >= 4
+    assert not any(_python_eval(p) for p in plans)

@@ -4,6 +4,7 @@ Sample.scala:16-73 exercises CrossValidator)."""
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.linalg import Vectors
@@ -171,3 +172,79 @@ def test_model_params_flow_from_estimator(spark):
     out = model.transform(df)
     stats = out.selectExpr("min(p2) lo", "max(p2) hi").first()
     assert stats.lo >= 0.0 and stats.hi <= 1.0
+
+
+def _numpy_sgd_step(X, y, w, V, n, lr, shrink):
+    """One reference SGD step (SGD.scala:114-181) in NumPy: forward
+    pass, error, per-feature gradients summed over the batch and
+    divided by the batch's sample count n, then L1 soft-thresholding."""
+    s = X @ V
+    pred = X @ w + 0.5 * ((s ** 2).sum(1) - ((X ** 2) @ (V ** 2)).sum(1))
+    err = pred - y
+    gw = X.T @ err
+    gv = X.T @ (err[:, None] * s) - V * ((X ** 2).T @ err)[:, None]
+
+    def soft(a):
+        return np.sign(a) * np.maximum(0.0, np.abs(a) - shrink)
+
+    return soft(w - lr * gw / n), soft(V - lr * gv / n), err
+
+
+def test_gradient_divisor_counts_every_batch_sample(spark):
+    """The gradient divisor is the batch's SAMPLE count
+    (dfMiniBatch.count, SGD.scala:124): a sample with no active feature
+    counts on the vector path, and fit_long divides by distinct sample
+    ids, not by (sample, feature) rows."""
+    from pyspark.sql import functions as F
+
+    from fmx.core.linalg import explode_vector
+
+    X = np.array([[1.0, 0.0, 2.0, 0.5],
+                  [0.0, 1.5, 0.0, 0.0],
+                  [-1.0, 0.0, 0.5, 0.0],
+                  [0.0, 0.0, 0.0, 0.0]])
+    y = np.array([1.0, 0.0, 2.0, 3.0])
+    df = spark.createDataFrame(
+        [(Vectors.dense(X[0]), 1.0),
+         (Vectors.sparse(4, [1, 3], [1.5, 0.0]), 0.0),  # stored 0.0
+         (Vectors.sparse(4, [0, 2], [-1.0, 0.5]), 2.0),
+         (Vectors.sparse(4, []), 3.0)],                 # zero-active
+        ["features", "label"])
+    kw = dict(dimFactorization=2, maxIter=1, miniBatchFraction=1.0,
+              regParam=0.01, stepSize=0.5, initialSd=0.5, seed=11)
+    lr, shrink = 0.5, 0.5 * 0.01
+
+    long_df = explode_vector(
+        df.withColumn("sampleId", F.monotonically_increasing_id()),
+        "features", id_cols=["sampleId", "label"]).cache()
+    est = FMRegressorSGD(**kw)
+    init = sorted(est._initial_params(long_df, 2, 0.5, 11).collect())
+    w = np.array([r.strength for r in init])
+    V = np.array([r.vec for r in init])
+
+    def params(model):
+        ws = sorted((r.featureId, r.strength)
+                    for r in model.strength.collect())
+        vs = sorted((r.featureId, r.vec) for r in model.factors.collect())
+        return np.array([s for _, s in ws]), np.array([v for _, v in vs])
+
+    # vector path: the zero-active sample is in n (4, not 3)
+    want_w, want_v, err = _numpy_sgd_step(X, y, w, V, 4, lr, shrink)
+    got_w, got_v = params(est.fit(df))
+    np.testing.assert_allclose(got_w, want_w, rtol=1e-12, atol=1e-15)
+    np.testing.assert_allclose(got_v, want_v, rtol=1e-12, atol=1e-15)
+    # the loss sums the samples that forward (the zero-active one has
+    # no exploded rows, as in the reference)
+    assert est.training_loss_ == pytest.approx([err[:3] @ err[:3]],
+                                               rel=1e-12)
+    assert not np.allclose(
+        _numpy_sgd_step(X, y, w, V, 3, lr, shrink)[0], want_w, rtol=1e-6)
+
+    # long path: 3 distinct samples over 8 (sample, feature) rows
+    assert long_df.count() == 8
+    est_long = FMRegressorSGD(**kw)
+    want_w, want_v, _ = _numpy_sgd_step(X[:3], y[:3], w, V, 3, lr, shrink)
+    got_w, got_v = params(est_long.fit_long(long_df))
+    np.testing.assert_allclose(got_w, want_w, rtol=1e-12, atol=1e-15)
+    np.testing.assert_allclose(got_v, want_v, rtol=1e-12, atol=1e-15)
+    long_df.unpersist()

@@ -87,26 +87,46 @@ def test_vector_sum_golden(spark):
 
 
 def test_explode_vector_dense_and_sparse(spark):
-    """U1 semantics: dense vectors emit zeros; sparse emit only stored
-    entries (FactorizationMachinesModel.scala:244-250)."""
-    from pyspark.ml.linalg import Vectors
+    """U1 semantics (FactorizationMachinesModel.scala:244-250), read in
+    the JVM from the VectorUDT storage struct: dense vectors emit zeros;
+    sparse ones emit exactly their STORED entries (a stored 0.0 too) in
+    stored order; null and empty vectors emit nothing; featureId /
+    featureValue stay int / double; no Python worker evaluates it."""
+    from pyspark.ml.linalg import Vectors, VectorUDT
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, StructField, StructType)
 
     df = spark.createDataFrame(
         [
             (100, Vectors.dense(1.0, 0.0, 1.5)),
             (101, Vectors.sparse(3, [(0, 0.5)])),
+            (102, Vectors.sparse(4, [1, 3], [0.0, -2.5])),  # stored 0.0
             (103, Vectors.sparse(3, [])),
+            (104, None),
+            (105, Vectors.dense(0.0, 0.0)),
+            (106, Vectors.dense([])),
         ],
-        ["rowId", "features"],
+        StructType([StructField("rowId", IntegerType()),
+                    StructField("features", VectorUDT())]),
     )
     out = L.explode_vector(df, "features", id_cols=["rowId"])
-    got = {(r.rowId, r.featureId): r.featureValue for r in out.collect()}
-    assert got == {
-        (100, 0): 1.0,
-        (100, 1): 0.0,  # dense zero IS emitted
-        (100, 2): 1.5,
-        (101, 0): 0.5,  # sparse zero is NOT
-    }
+    assert out.schema["featureId"].dataType == IntegerType()
+    assert out.schema["featureValue"].dataType == DoubleType()
+    # stable sort on rowId only: entries keep their order within a vector
+    got = sorted(((r.rowId, r.featureId, r.featureValue)
+                  for r in out.collect()), key=lambda t: t[0])
+    assert got == [
+        (100, 0, 1.0),
+        (100, 1, 0.0),  # dense zero IS emitted
+        (100, 2, 1.5),
+        (101, 0, 0.5),  # unstored sparse zeros are NOT
+        (102, 1, 0.0),  # a stored sparse zero IS
+        (102, 3, -2.5),
+        (105, 0, 0.0),
+        (105, 1, 0.0),
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
     arr = spark.createDataFrame([(1, [2.0, 0.0])], "rowId int, features array<double>")
     out2 = L.explode_vector(arr, "features", id_cols=["rowId"])

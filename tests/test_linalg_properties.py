@@ -64,3 +64,49 @@ def test_vec_sum_agg_matches_numpy(spark, rows):
     got = L.vec_sum_agg(df, ["id"], "vec").first().vec_sum
     want = list(np.sum(np.array(rows), axis=0))
     assert got == pytest.approx(want, rel=1e-9, abs=1e-6)
+
+
+def _foreach_active(v):
+    """Pure-Python ml.linalg foreachActive: dense emits every position,
+    sparse exactly its stored entries."""
+    from pyspark.ml.linalg import SparseVector
+
+    if isinstance(v, SparseVector):
+        return [(int(i), float(x)) for i, x in zip(v.indices, v.values)]
+    return [(i, float(x)) for i, x in enumerate(v.toArray())]
+
+
+@st.composite
+def ml_vectors(draw):
+    from pyspark.ml.linalg import Vectors
+
+    size = draw(st.integers(min_value=0, max_value=6))
+    if draw(st.booleans()):
+        return Vectors.dense(draw(st.lists(finite, min_size=size,
+                                           max_size=size)))
+    idx = sorted(draw(st.sets(st.integers(0, max(size - 1, 0)),
+                              max_size=size)))
+    vals = draw(st.lists(finite | st.just(0.0), min_size=len(idx),
+                         max_size=len(idx)))
+    return Vectors.sparse(size, idx, vals)
+
+
+@settings(max_examples=15, deadline=None)
+@given(vecs=st.lists(ml_vectors(), min_size=1, max_size=5))
+def test_explode_vector_matches_foreach_active(spark, vecs):
+    from pyspark.ml.linalg import VectorUDT
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, LongType, StructField, StructType)
+
+    df = spark.createDataFrame(
+        list(enumerate(vecs)),
+        StructType([StructField("rowId", LongType()),
+                    StructField("features", VectorUDT())]))
+    out = L.explode_vector(df, "features", id_cols=["rowId"])
+    assert out.schema["featureId"].dataType == IntegerType()
+    assert out.schema["featureValue"].dataType == DoubleType()
+    got = [(r.rowId, r.featureId, r.featureValue) for r in out.collect()]
+    want = [(row, i, x) for row, v in enumerate(vecs)
+            for i, x in _foreach_active(v)]
+    # stable sort on rowId only: entries keep their order within a vector
+    assert sorted(got, key=lambda t: t[0]) == want
