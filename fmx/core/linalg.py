@@ -32,7 +32,6 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
 
 ColumnOrName = Column | str
 
@@ -266,8 +265,7 @@ def vec_sum_agg(df: DataFrame, group_cols: Iterable[str], vec_col: str,
 
     Note: a group whose vectors are ALL null/empty produces no exploded
     rows and is therefore ABSENT from the output (unlike a plain
-    groupBy, which would emit the group).  Use ``vec_sum_agg_expr``
-    when a row per group is required regardless.
+    groupBy, which would emit the group).
     """
     group_cols = list(group_cols)
     exploded = df.select(*group_cols,
@@ -281,40 +279,3 @@ def vec_sum_agg(df: DataFrame, group_cols: Iterable[str], vec_col: str,
                 F.transform("_a", lambda st: st["_s"]).alias(out_col))
     )
 
-
-def vec_sum_agg_pandas(k: int) -> Column:
-    """Arrow-batched GROUPED_AGG variant of the VectorSum UDAF (SURVEY
-    A4 strategy (c)): numpy sums one Arrow batch per group.
-
-    Use over the relational ``vec_sum_agg`` only when groups are small
-    and the surrounding plan is already pandas-bound — it serializes the
-    vectors across the Python boundary, which the native plans never do.
-
-    Usage: ``df.groupBy(k).agg(vec_sum_agg_pandas(3)("vec"))``
-    """
-    import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # signature untyped on purpose: Series -> array is only expressible
-    # via the explicit GROUPED_AGG function type
-    @pandas_udf(ArrayType(DoubleType()), PandasUDFType.GROUPED_AGG)
-    def _vec_sum(vecs):
-        # null-skip like the reference UDAF's update (and the
-        # relational twins) — np.stack over a None crashes the worker
-        arrs = [v for v in vecs.to_numpy() if v is not None]
-        if not arrs:
-            return [0.0] * k
-        return list(np.sum(np.stack(arrs), axis=0).astype(float))
-
-    return _vec_sum
-
-
-def vec_sum_agg_expr(vec_col: ColumnOrName, k: int) -> Column:
-    """Single-expression variant for small groups: fold collect_list with
-    zip_with.  Bounded by (rows-per-group × k) doubles in the agg buffer —
-    use ``vec_sum_agg`` when groups can be huge."""
-    return F.aggregate(
-        F.collect_list(_c(vec_col)),
-        zeros(k),
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-    )

@@ -17,11 +17,11 @@ Spark-first design notes (vs the reference's shape):
 
 - The reference computes the per-sample summed vector with a custom
   ``VectorSum`` UDAF (Model.scala:122) and squares it in a UDF
-  (``sumVx``, Model.scala:260-262).  We never materialize that vector at
-  all: Σ_f(Σ_i v_if·x_i)² is computed as two scalar hash aggregations over
-  the long format — posexplode to (sampleId, f) grain, sum, square, sum.
-  Everything stays in whole-stage codegen; a hot sample spreads across k
-  shuffle keys instead of hitting one UDAF buffer.
+  (``sumVx``, Model.scala:260-262).  Here predict and ``calc_loss_grad``
+  share the one forward kernel ``dataflow.forward_wide``: the k
+  per-factor sums Σ_i v_if·x_i ride the same per-sample hash aggregate
+  as the linear terms (k is a model constant), so a prediction costs
+  one exchange and everything stays in whole-stage codegen.
 - Inner joins drop unlearned featureIds (Model.scala:103-112 semantics,
   golden-tested); samples with no active features get no prediction row
   and fall back to ``global_bias`` via left join + na.fill
@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fmx.core import linalg as L
+from fmx.fm import dataflow as DF
 
 __all__ = ["FMModel", "FMParamsBase"]
 
@@ -176,48 +177,15 @@ class FMModel(Model, FMParamsBase, MLWritable, MLReadable):
         """Predict from long format ``(sample_id, featureId, featureValue)``.
 
         Relational plan (reference Model.scala:90-133, re-shaped):
-        inner-join params → per-row terms → ONE hash-agg on (sample)
-        → scalar combine → clamp.
-
-        The pairwise term Σ_f (Σ_i v_if·x_i)² needs the k per-factor
-        sums s_f; k is a model constant, so they ride the SAME
-        per-sample aggregation as the linear terms — k indexed sums
-        ``sum(vfxi[f])`` — instead of a posexplode (k-way row fan-out)
-        plus a second (sample, f) shuffle plus a join back.  One
-        exchange total where the r12 shape had three plus a join
-        (optimization guide §2.4: two operations keyed the same way
-        share one exchange; §2.3: aggregate before you shuffle — the
-        k sums leave the map side as one k-wide partial row, the
-        exploded shape shipped k partial rows)."""
+        inner-join params (``DF.join_params``) → ``DF.forward_wide``'s
+        ONE per-sample hash-agg → clamp.  The factor-sum array ``s`` it
+        also yields is pruned from this projection by Catalyst."""
         strength, factors = self._param_tables()
-        k = self.dim_factorization
-        rows = (
-            exploded.alias("ex")
-            .join(strength.alias("ds"), "featureId", "inner")
-            .join(factors.alias("fi"), "featureId", "inner")
-            .select(
-                F.col(sample_id),
-                (F.col("strength") * F.col("featureValue")).alias("wixi"),
-                L.vi2xi2("vec", F.col("featureValue")).alias("vi2xi2"),
-                L.vec_scale("vec", F.col("featureValue")).alias("vfxi"),
-            )
-        )
-        per_sample = rows.groupBy(sample_id).agg(
-            F.sum("wixi").alias("wixiSum"),
-            F.sum("vi2xi2").alias("vi2xi2Sum"),
-            *[F.sum(F.col("vfxi")[f]).alias(f"_s{f}") for f in range(k)],
-        )
-        vfxi_sum_sq = None
-        for f in range(k):
-            term = F.col(f"_s{f}") * F.col(f"_s{f}")
-            vfxi_sum_sq = term if vfxi_sum_sq is None else vfxi_sum_sq + term
-        pred = per_sample.select(
-            F.col(sample_id),
-            (F.lit(self.global_bias) + F.col("wixiSum")
-             + 0.5 * (vfxi_sum_sq - F.col("vi2xi2Sum"))
-             ).alias(self.getPredictionCol()),
-        )
-        return self._clamp(pred)
+        rows = DF.join_params(exploded, strength, factors, how="inner")
+        fwd = DF.forward_wide(rows, self.global_bias, self.dim_factorization,
+                              sample_id=sample_id)
+        return self._clamp(fwd.select(
+            sample_id, F.col("pred").alias(self.getPredictionCol())))
 
     def _clamp(self, pred: DataFrame) -> DataFrame:
         p = self.getPredictionCol()
@@ -242,47 +210,26 @@ class FMModel(Model, FMParamsBase, MLWritable, MLReadable):
         """
         if initial_sd <= 0.0:
             raise ValueError("initial_sd must be > 0.0")
-        from fmx.fm import dataflow as DF
-
         sid, label = self.getSampleIdCol(), self.getLabelCol()
-        # cache: the plan fans into four branches (rows, factor sums,
-        # forward, deltaVi) re-joined on this id —
-        # monotonically_increasing_id is partition-layout-dependent, so
-        # without a cache the branches could disagree under AQE /
-        # re-listing (reference caches dfSampleIndexed, Model.scala:74)
+        # cache: the plan fans into two branches (forward, row
+        # gradients) re-joined on this id — monotonically_increasing_id
+        # is partition-layout-dependent, so without a cache the branches
+        # could disagree under AQE / re-listing (reference caches
+        # dfSampleIndexed, Model.scala:74)
         indexed, _ = self._index_dataset(dataset)
         ex = L.explode_vector(indexed, self.getFeaturesCol(),
                               id_cols=[sid, label])
-        strength = self.strength.select(
-            "featureId", F.col("strength"))
-        factors = self.factors.select("featureId", F.col("vec"))
-        rows = DF.join_params(ex, strength, factors, how="left",
+        rows = DF.join_params(ex, self.strength, self.factors, how="left",
                               k=self.dim_factorization, sd=float(initial_sd),
-                              seed=seed, sample_id=sid)
-        sf = DF.factor_sums(rows, sample_id=sid)
-        pred = DF.forward(rows, sf, self.global_bias, label_col=label,
-                          sample_id=sid)
-        rows_f = rows.select(sid, label, "featureId", "x",
-                             F.posexplode("v").alias("f", "vf"))
-        delta_vi = (
-            rows_f.join(sf, [sid, "f"])
-            .select(sid, "featureId",
-                    F.struct("f",
-                             (F.col("x") * F.col("s")
-                              - F.col("vf") * F.col("x") * F.col("x"))
-                             .alias("dv")).alias("fd"))
-            .groupBy(sid, "featureId")
-            .agg(F.transform(F.array_sort(F.collect_list("fd")),
-                             lambda st: st["dv"]).alias("deltaVi")))
-        return (rows.select(sid, label, "featureId",
-                            F.col("x").alias("deltaWi"))
-                .join(delta_vi, [sid, "featureId"])
-                .join(pred.select(
-                    sid, F.col("pred").alias(self.getPredictionCol()),
-                    (F.col("err") * F.col("err")).alias("loss")), sid)
+                              seed=seed)
+        fwd = DF.forward_wide(rows, self.global_bias, self.dim_factorization,
+                              label_col=label, sample_id=sid)
+        return (DF.row_gradients(rows, fwd, self.dim_factorization,
+                                 sample_id=sid)
                 .select(label, sid, "featureId",
-                        self.getPredictionCol(), "loss",
-                        "deltaWi", "deltaVi"))
+                        F.col("pred").alias(self.getPredictionCol()),
+                        (F.col("err") * F.col("err")).alias("loss"),
+                        F.col("x").alias("deltaWi"), "deltaVi"))
 
     # -- persistence (reference M6/M7 surface: pyspark.ml-native, so
     # Pipeline([...]).save and CrossValidatorModel.save round-trip a

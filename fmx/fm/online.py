@@ -13,6 +13,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from fmx.core import linalg as L
 from fmx.fm.model import FMModel
@@ -37,20 +38,22 @@ class OnlineFMTrainer:
         """foreachBatch sink: one SGD step on this micro-batch.  Expects
         the estimator's featuresCol + labelCol on ``batch_df``."""
         est = self.estimator
-        if batch_df.isEmpty():
-            return
-        sid = est.getSampleIdCol()
-        from pyspark.sql import functions as F
-
+        sid, label = est.getSampleIdCol(), est.getLabelCol()
         prepped = (batch_df
-                   .select(F.col(est.getLabelCol()).cast("double")
-                           .alias(est.getLabelCol()),
+                   .select(F.col(label).cast("double").alias(label),
                            F.col(est.getFeaturesCol()).alias("__features__"))
                    .withColumn(sid, F.monotonically_increasing_id())
                    .cache())
+        # ONE read of the micro-batch source: the count materializes the
+        # cache and is the step's gradient divisor (samples without an
+        # active feature included, as in batch fitting)
+        n = prepped.count()
+        if n == 0:
+            prepped.unpersist()
+            return
+        exploded = L.explode_vector(prepped, "__features__",
+                                    id_cols=[sid, label])
         if self.params is None:
-            exploded = L.explode_vector(prepped, "__features__",
-                                        id_cols=[sid, est.getLabelCol()])
             self.params = est._initial_params(
                 exploded, est.getDimFactorization(),
                 float(est.getInitialSd()), est.getOrDefault(est.seed))
@@ -60,10 +63,8 @@ class OnlineFMTrainer:
         # the work into the NEXT micro-batch, which would need to re-read
         # this batch's source (breaks on non-replayable streams)
         self.params, self.w0, loss = est._sgd_step(
-            self.params, self.w0, prepped,
-            self.step_count, explode=True, eager=True)
-        if loss is not None:
-            self.losses.append(loss)
+            self.params, self.w0, exploded, n, self.step_count, eager=True)
+        self.losses.append(loss)
         prepped.unpersist()
 
     def train(self, stream: DataFrame, checkpoint: str | None = None,

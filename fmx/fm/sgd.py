@@ -49,7 +49,7 @@ from pyspark.ml.param.shared import (
     HasFitIntercept, HasMaxIter, HasRegParam, HasSeed, HasStepSize,
 )
 from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import fmx.fm.dataflow as DF
@@ -204,7 +204,11 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
             batch_of.alias("_b")).cache()
         batches = [data.filter(F.col("_b") == i).drop("_b")
                    for i in range(max_iter)]
-        return self._run_sgd(data.drop("_b"), batches, explode=False)
+        # one row per active entry: n counts distinct sample ids
+        model = self._run_sgd(data.drop("_b"), batches, batches,
+                              F.countDistinct(sid))
+        data.unpersist()
+        return model
 
     def _fit(self, dataset: DataFrame) -> FMModel:
         sid = self.getSampleIdCol()
@@ -219,16 +223,28 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         frac = float(self.getMiniBatchFraction())
         max_iter = self.getOrDefault(self.maxIter)
         batches = data.randomSplit([frac] * max_iter, seed=seed)
-        return self._run_sgd(data, batches, explode=True)
 
+        def explode(df):
+            return L.explode_vector(df, "__features__", id_cols=[sid, label])
 
-    def _sgd_step(self, params, w0: float, batch: DataFrame,
-                  it: int, explode: bool = True, eager: bool = False,
-                  carry: list | None = None, batch_n: int | None = None):
+        # n counts rows of the PRE-explode batches (one row per sample),
+        # so samples without an active feature count, as in the reference
+        model = self._run_sgd(explode(data), [explode(b) for b in batches],
+                              batches, F.count(F.lit(1)))
+        data.unpersist()
+        return model
+
+    def _sgd_step(self, params, w0: float, batch: DataFrame, n: int,
+                  it: int, eager: bool = False,
+                  carry: list | None = None):
         """One mini-batch SGD update (the reference foldLeft body,
-        SGD.scala:114-212).  ``params`` is the merged
-        (featureId, strength, vec) table; returns (params', w0', loss)
-        — also the unit of online training on streams (fmx.fm.online).
+        SGD.scala:114-212) on a LONG-format batch ``(sampleIdCol,
+        labelCol, featureId, featureValue)`` of ``n`` samples — n, the
+        gradient divisor, counts samples without an active feature too,
+        so callers take it from the pre-explode batch.  ``params`` is
+        the merged (featureId, strength, vec) table; returns (params',
+        w0', loss), or loss None for an empty batch — also the unit of
+        online training on streams (fmx.fm.online).
 
         Cache lifecycle: the new param tables are lazy localCheckpoints
         that materialize inside the NEXT step's first action, so this
@@ -237,6 +253,8 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         that action.  ``eager=True`` (online/streaming path) materializes
         the checkpoints immediately instead, so the micro-batch source
         never needs to be re-read (non-replayable sources)."""
+        if n == 0:
+            return params, w0, None
         k = self.getDimFactorization()
         sd = float(self.getInitialSd())
         seed = self.getOrDefault(self.seed)
@@ -244,27 +262,15 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         label = self.getLabelCol()
         lr = float(self.getOrDefault(self.stepSize)) / math.sqrt(it)
         shrink = lr * float(self.getOrDefault(self.regParam))
-        # gradient divisor: the batch's SAMPLE count, samples without
-        # an active feature included (dfMiniBatch.count, SGD.scala:124).
-        # ``_run_sgd`` precomputes every batch's n in one job;
-        # standalone/online callers count the pre-explode batch here.
-        n = batch.count() if batch_n is None else batch_n
-        if n == 0:
-            return params, w0, None
 
-        ex = (L.explode_vector(batch, "__features__", id_cols=[sid, label])
-              if explode else batch)
         # ONE left join attaches both params + seeded init for features
         # unseen by the table (reference calcLossGrad J2,
         # Model.scala:154-171)
-        rows = DF.join_params(ex, params, how="left", k=k,
-                              sd=sd, seed=seed + it, sample_id=sid).cache()
+        rows = DF.join_params(batch, params, how="left", k=k,
+                              sd=sd, seed=seed + it).cache()
         # fused forward (guide §2.4): pred, err and the k factor sums
-        # come from ONE per-sample hash-agg (forward_wide) instead of
-        # the factor_sums agg + forward's two aggs + join, and the
-        # gradient pass joins that one relation on sample_id instead
-        # of the (sample, f) sf relation plus err separately — two
-        # fewer shuffles per training iteration
+        # come from ONE per-sample hash-agg, and the gradient pass
+        # joins that one relation on sample_id
         pred = self._error_and_loss(
             DF.forward_wide(rows, w0, k, label_col=label, sample_id=sid),
             label).cache()
@@ -284,9 +290,8 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
             # driver-side; piggybacks on the loss action)
             w0 = w0 - lr * (float(stats.err_sum or 0.0) / n)
 
-        grads = DF.per_row_gradients_wide(rows, pred, sample_id=sid,
-                                          label_col=label)
-        grad = DF.aggregate_gradients_merged(grads, n, lr, k)
+        grad = DF.aggregate_gradients_merged(
+            DF.row_gradients(rows, pred, k, sample_id=sid), n, lr, k)
 
         # upsert: params ∪ gradients in ONE outer join (the tables are
         # key-aligned, so the merged layout halves the join + checkpoint
@@ -319,32 +324,32 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         return params, w0, loss
 
     def _run_sgd(self, data: DataFrame, batches: list[DataFrame],
-                 explode: bool) -> FMModel:
+                 counted: list[DataFrame], n_expr: Column) -> FMModel:
+        """The one SGD core over long-format ``data`` and ``batches``.
+        Each batch's gradient divisor n is its SAMPLE count
+        (dfMiniBatch.count, SGD.scala:124): ``n_expr`` aggregated over
+        the matching ``counted`` batch.  The caller owns (and releases
+        after this returns) the cache they all read from."""
         k = self.getDimFactorization()
         sd = float(self.getInitialSd())
         seed = self.getOrDefault(self.seed)
         sid = self.getSampleIdCol()
-        label = self.getLabelCol()
         w0 = 0.0  # reference inits globalBias to 0 and never updates it
 
-        exploded_all = (
-            L.explode_vector(data, "__features__", id_cols=[sid, label])
-            if explode else data)
-        params = self._initial_params(exploded_all, k, sd, seed)
+        params = self._initial_params(data, k, sd, seed)
         # lazy (r14): the init table's checkpoint materializes inside
         # step 1's loss action instead of costing a separate upfront
         # job per fit — same rows, the RDD is computed exactly once
         # either way
         params = params.localCheckpoint(eager=False)
 
-        # every batch's sample count n in ONE driver action: rows of
-        # the pre-explode batch for vectors (one row per sample, so
-        # samples without an active feature still count), distinct
-        # sample ids in long format (one row per active entry)
+        # every batch's n in ONE driver action.  Counted after the
+        # checkpoint above, whose planning fills the source cache:
+        # against an unfilled cache each batch of the union would add
+        # its own cache-stage job
         tagged = reduce(DataFrame.unionAll,
                         [b.select(F.lit(i).alias("_b"), sid)
-                         for i, b in enumerate(batches)])
-        n_expr = F.count(F.lit(1)) if explode else F.countDistinct(sid)
+                         for i, b in enumerate(counted)])
         counts = {int(r["_b"]): int(r["n"]) for r in
                   tagged.groupBy("_b").agg(n_expr.alias("n")).collect()}
 
@@ -352,18 +357,16 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         carry: list = []
         for it, batch in enumerate(batches, start=1):
             params, w0, loss = self._sgd_step(
-                params, w0, batch, it, explode=explode, carry=carry,
-                batch_n=counts.get(it - 1, 0))
+                params, w0, batch, counts.get(it - 1, 0), it, carry=carry)
             if loss is not None:
                 self.training_loss_.append(loss)
         if carry:
             # materialize the final lazy checkpoint (ONE action, once
             # per fit — not per iteration) before dropping the last
-            # step's caches and the source cache
+            # step's caches; the caller then drops the source cache
             params.count()
             for df in carry:
                 df.unpersist()
-        data.unpersist()
         model = FMModel(
             dim_factorization=k, global_bias=w0,
             strength=params.select("featureId", "strength"),

@@ -25,6 +25,18 @@ def test_online_steps_reduce_loss(spark):
     assert out.count() == 150
 
 
+def test_online_empty_micro_batch_is_a_no_op(spark):
+    """An empty micro-batch records no step, no loss and no params."""
+    est = FMRegressorSGD(dimFactorization=2, seed=5)
+    trainer = OnlineFMTrainer(estimator=est)
+    empty = spark.createDataFrame([], "features array<double>, label double")
+    trainer.process_batch(empty, 0)
+    assert trainer.step_count == 0
+    assert trainer.losses == []
+    assert trainer.params is None
+    assert trainer.w0 == 0.0
+
+
 def test_online_training_through_real_stream(spark, sf_dir):
     """The trainer attached to an actual file stream learns a constant
     target through the streaming machinery."""

@@ -189,3 +189,20 @@ def test_calc_loss_grad_rejects_bad_sd(spark):
     model = build_golden_model(spark)
     with pytest.raises(ValueError):
         model.calc_loss_grad(spark.range(1), initial_sd=0.0)
+
+
+def test_calc_loss_grad_plan_is_one_forward_pass(spark):
+    """calc_loss_grad runs the shared forward kernel once: one
+    per-sample aggregate (partial + final), with deltaVi computed
+    in-row — no (sample, f) posexplode and no collect_list regroup."""
+    from pyspark.ml.linalg import Vectors
+
+    model = build_golden_model(spark)
+    df = spark.createDataFrame(
+        [(Vectors.dense(1.0, 2.0, 1.5, -1.0), 20.0),
+         (Vectors.sparse(10, [(0, 0.5), (9, 1.0)]), 5.0)],
+        ["features", "label"])
+    out = model.calc_loss_grad(df, seed=7)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("HashAggregate") == 2, plan
+    assert "posexplode" not in plan and "collect_list" not in plan, plan

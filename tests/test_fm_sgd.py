@@ -81,6 +81,14 @@ def test_cross_validator_compat(spark):
     assert "prediction" in out.columns
 
 
+def _cached_relation_rdds(spark) -> int:
+    """Persisted RDDs of cached relations, which are named after their
+    plan (unnamed localCheckpoints excluded: the context cleaner drops
+    those on its own schedule)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(1 for r in rdds if r.name() is not None)
+
+
 def test_fit_long_format(spark):
     """Long-format training: no feature vectors anywhere; converges and
     is deterministic under the seed."""
@@ -96,7 +104,11 @@ def test_fit_long_format(spark):
     est = FMRegressorSGD(dimFactorization=3, maxIter=4,
                          regParam=0.0, stepSize=0.5, seed=77,
                          fitIntercept=True)
+    before = _cached_relation_rdds(spark)
     m1 = est.fit_long(long_df)
+    # fit_long releases the batch-tagged cache it made itself; the
+    # caller's long_df cache stays
+    assert _cached_relation_rdds(spark) == before
     losses1 = list(est.training_loss_)
     assert losses1[-1] < losses1[0], losses1
 
@@ -204,12 +216,11 @@ def test_gradient_divisor_counts_every_batch_sample(spark):
                   [-1.0, 0.0, 0.5, 0.0],
                   [0.0, 0.0, 0.0, 0.0]])
     y = np.array([1.0, 0.0, 2.0, 3.0])
-    df = spark.createDataFrame(
-        [(Vectors.dense(X[0]), 1.0),
-         (Vectors.sparse(4, [1, 3], [1.5, 0.0]), 0.0),  # stored 0.0
-         (Vectors.sparse(4, [0, 2], [-1.0, 0.5]), 2.0),
-         (Vectors.sparse(4, []), 3.0)],                 # zero-active
-        ["features", "label"])
+    vec_rows = [(Vectors.dense(X[0]), 1.0),
+                (Vectors.sparse(4, [1, 3], [1.5, 0.0]), 0.0),  # stored 0.0
+                (Vectors.sparse(4, [0, 2], [-1.0, 0.5]), 2.0),
+                (Vectors.sparse(4, []), 3.0)]                  # zero-active
+    df = spark.createDataFrame(vec_rows, ["features", "label"])
     kw = dict(dimFactorization=2, maxIter=1, miniBatchFraction=1.0,
               regParam=0.01, stepSize=0.5, initialSd=0.5, seed=11)
     lr, shrink = 0.5, 0.5 * 0.01
@@ -248,3 +259,16 @@ def test_gradient_divisor_counts_every_batch_sample(spark):
     np.testing.assert_allclose(got_w, want_w, rtol=1e-12, atol=1e-15)
     np.testing.assert_allclose(got_v, want_v, rtol=1e-12, atol=1e-15)
     long_df.unpersist()
+
+    # without a zero-active sample, the vector path and the long path
+    # are the same SGD core on the same rows: identical params and w0
+    df3 = spark.createDataFrame(vec_rows[:3], ["features", "label"])
+    long3 = explode_vector(
+        df3.withColumn("sampleId", F.monotonically_increasing_id()),
+        "features", id_cols=["sampleId", "label"])
+    kw_b = dict(kw, fitIntercept=True)
+    m_vec = FMRegressorSGD(**kw_b).fit(df3)
+    m_long = FMRegressorSGD(**kw_b).fit_long(long3)
+    for a, b in zip(params(m_vec), params(m_long)):
+        np.testing.assert_array_equal(a, b)
+    assert m_vec.global_bias == m_long.global_bias != 0.0

@@ -78,13 +78,6 @@ def test_vector_sum_golden(spark):
     assert out[0].id == 1
     assert out[0].vec_sum == pytest.approx([111.11, 222.22, 333.33], abs=1e-8)
 
-    out2 = df.groupBy("id").agg(L.vec_sum_agg_expr("vec", 3).alias("s")).first()
-    assert out2.s == pytest.approx([111.11, 222.22, 333.33], abs=1e-8)
-
-    out3 = (df.groupBy("id")
-            .agg(L.vec_sum_agg_pandas(3)("vec").alias("s")).first())
-    assert out3.s == pytest.approx([111.11, 222.22, 333.33], abs=1e-8)
-
 
 def test_explode_vector_dense_and_sparse(spark):
     """U1 semantics (FactorizationMachinesModel.scala:244-250), read in

@@ -11,6 +11,7 @@ from __future__ import annotations
 import importlib
 import inspect
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -47,7 +48,8 @@ def first_paragraph(doc: str | None) -> str:
     return " ".join(line.strip() for line in para.splitlines())
 
 
-def main() -> None:
+def render() -> tuple[str, int]:
+    """The text of docs/API.md and the number of entries it lists."""
     out = ["# fmx API reference",
            "",
            "Generated by `python tools/gen_api_docs.py` from the package's",
@@ -88,17 +90,23 @@ def main() -> None:
                 out.append(f"  {doc}")
                 n_items += 1
             out.append("")
+    return "\n".join(out) + "\n", n_items
+
+
+README_COUNT = re.compile(r"lists all (\d+) with signatures")
+
+
+def main() -> None:
+    text, n_items = render()
     os.makedirs("docs", exist_ok=True)
     with open("docs/API.md", "w") as f:
-        f.write("\n".join(out) + "\n")
+        f.write(text)
     print(f"wrote docs/API.md ({n_items} entries)")
     # keep README's operator count in lockstep (r13: the hand-written
     # "lists all N with signatures" drifted two rounds behind)
-    import re
     with open("README.md") as f:
         readme = f.read()
-    new = re.sub(r"lists all \d+ with signatures",
-                 f"lists all {n_items} with signatures", readme)
+    new = README_COUNT.sub(f"lists all {n_items} with signatures", readme)
     if new != readme:
         with open("README.md", "w") as f:
             f.write(new)
