@@ -274,7 +274,14 @@ def min_label_shortcut(edges: DataFrame, nbr_rounds: int = 2,
     construction cost 0.2-1.4 s of driver planning EACH).  A caller
     running a much deeper jump schedule should re-introduce a
     label checkpoint every few rounds — the exponential plan growth,
-    not the data, is what would bite first."""
+    not the data, is what would bite first.
+
+    Raises ``ValueError`` unless ``nbr_rounds >= 1`` (the first
+    hash-min round always runs) and ``jump_rounds >= 0``."""
+    if int(nbr_rounds) < 1 or int(jump_rounds) < 0:
+        raise ValueError(
+            f"min_label_shortcut needs nbr_rounds >= 1 and jump_rounds >= 0"
+            f" (got {nbr_rounds}, {jump_rounds})")
     und = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
            .unionByName(
                edges.select(F.col(dst).alias("node"),

@@ -1,14 +1,33 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- ``cosine_topk``: exact brute-force top-k — broadcast the (small) query
-  set against the corpus, JVM-native dot products, per-query top-k via
-  ranking window.  The baseline and the verifier.
-- ``random_projection_lsh``: sign-LSH bucketing (random hyperplanes
-  derived from md5 hashes — engine-portable, deterministic).  The scale
-  path: candidates share a bucket key, so search is an equi-join instead
-  of a cross join; recall tunable via #planes / #tables.
+- ``cosine_topk`` / ``mips_topk``: exact brute-force top-k — broadcast
+  the (small) query set against the corpus, JVM-native dot products.
+  The baseline and the verifier.
+- ``random_projection_lsh`` / ``lsh_topk``: sign-LSH bucketing (random
+  hyperplanes derived from md5 hashes — engine-portable,
+  deterministic).  Candidates share a bucket key, so search is an
+  equi-join instead of a cross join; recall tunable via #planes.
 - ``ivf_topk``: IVF-style coarse quantization — assign every vector to
-  its nearest of C centroids, probe only the query's cell.
+  its nearest of C centroids, probe only the query's cells.
+- ``pq_encode`` / ``pq_topk`` / ``ivfpq_topk`` (+ the ``*_rerank_topk``
+  two-stage forms and the Lloyd-trained ``pq_codebook_trained``):
+  product quantization with asymmetric distance computation, over raw
+  vectors or over IVF residuals.
+
+Shared cores, so each piece of math has one definition:
+
+- ``_pq_*`` is the one PQ kernel.  ``_pq_dsub`` checks the subspace
+  split, ``_pq_argmin`` is the nearest-code rule (round 9, lowest code
+  on ties, absent codes skipped), ``_pq_wide`` pivots a codebook to
+  one broadcast row per vector position, ``_pq_sums`` is the one
+  distance aggregate, ``_pq_codes`` the in-row code vector and
+  ``_pq_adc`` the distance-table lookup + ranking.  ``pq_topk`` and
+  ``ivfpq_topk`` differ only in the rows they feed it (raw vectors
+  vs residuals keyed by cell); ``pq_encode`` and Lloyd training use
+  the same argmin at (id, sub) grain.
+- ``_top_k`` is every per-query ranking tail (row_number over the
+  score, ties to the lower id) and ``_cosine_rerank`` the exact
+  rerank of a shortlist.
 
 At 100 TB the corpus side never broadcasts; the query side does.  All
 plans keep the corpus scan pruned to (id, vector).
@@ -70,6 +89,36 @@ def _cosine_pairs(corpus: DataFrame, queries: DataFrame, id_col: str,
                     *[f"_c_{x}" for x in c_extra]))
 
 
+def _top_k(scored: DataFrame, query_id: str, order: F.Column,
+           id_col: str, k: int) -> DataFrame:
+    """The one per-query ranking tail: ``rank`` = row_number over
+    ``order`` with the corpus id as total tie-break, kept while
+    <= ``k`` (Spark plans the filter as a per-partition
+    WindowGroupLimit, so each partition keeps a k-row heap)."""
+    w = Window.partitionBy(query_id).orderBy(order, F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _cosine_rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+                   id_col: str, vec_col: str, k: int,
+                   query_id: str) -> DataFrame:
+    """Exact cosine rerank of a (query_id, id) shortlist: full vectors
+    are fetched for the candidate rows only — a candidate-sized
+    equi-join, never a corpus-wide one — then the top ``k``."""
+    cvec = _as_double(corpus, vec_col).select(
+        F.col(id_col), F.col(vec_col).alias("_cv"))
+    qvec = _as_double(queries, vec_col).select(
+        F.col(id_col).alias(query_id), F.col(vec_col).alias("_qv"))
+    sim = (cand.select(query_id, id_col)
+           .join(cvec, id_col)
+           .join(F.broadcast(qvec), query_id)
+           .select(query_id, id_col,
+                   F.round(L.cosine_similarity("_qv", "_cv"), 6)
+                   .alias("cosine")))
+    return _top_k(sim, query_id, F.col("cosine").desc(), id_col, k)
+
+
 def cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                 vec_col: str, k: int = 5,
                 query_id: str = "query_id") -> DataFrame:
@@ -81,10 +130,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     Rank is deterministic: ties broken on corpus id after rounding.
     """
     sim = _cosine_pairs(corpus, queries, id_col, vec_col, query_id)
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(sim, query_id, F.col("cosine").desc(), id_col, k)
 
 
 def mips_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -108,10 +154,7 @@ def mips_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
              .filter(F.col(id_col) != F.col(query_id))
              .select(query_id, id_col,
                      F.round(L.vec_dot("_qv", "_cv"), 6).alias("dot")))
-    w = Window.partitionBy(query_id).orderBy(F.col("dot").desc(),
-                                             F.col(id_col))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(pairs, query_id, F.col("dot").desc(), id_col, k)
 
 
 def jl_project(df: DataFrame, id_col: str, vec_col: str,
@@ -215,10 +258,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     sim = cand.select(
         query_id, id_col,
         F.round(L.cosine_similarity("_qv", F.col(vec_col)), 6).alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(sim, query_id, F.col("cosine").desc(), id_col, k)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -305,10 +345,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
            .select(query_id, id_col,
                    F.round(L.cosine_similarity("_qv", F.col(vec_col)), 6)
                    .alias("cosine")))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(sim, query_id, F.col("cosine").desc(), id_col, k)
 
 
 def _subspace_explode(df: DataFrame, id_col: str, vec_col: str,
@@ -325,6 +362,94 @@ def _subspace_explode(df: DataFrame, id_col: str, vec_col: str,
                     "x"))
 
 
+# --- the PQ kernel ---------------------------------------------------
+# Every PQ path (encode, Lloyd assignment, ADC search, IVF-PQ residual
+# search) goes through these helpers, so the subspace split, the
+# nearest-code rule and the distance fold have one definition each.
+# Wide expression lists are built as SQL text: one py4j round-trip per
+# aggregate instead of ~8 Column-API calls, and plan construction is
+# inside every query's wall.
+
+def _pq_dsub(corpus: DataFrame, vec_col: str, m: int,
+             dim: int | None) -> int:
+    """Subspace width ``dim / m`` (``dim`` read off the first vector
+    when not given); raises unless ``m`` divides ``dim``."""
+    if dim is None:
+        dim = len(corpus.select(vec_col).first()[0])
+    if dim % m != 0:
+        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
+    return dim // m
+
+
+def _pq_argmin(dist_cols: list[str]) -> str:
+    """SQL for the nearest code: ``dist_cols[c]`` holds the squared
+    distance to code ``c``.  Lexicographic array_min over
+    (round(d2, 9), code) structs — ties go to the lower code, and the
+    9dp round makes the choice engine-portable.  A code id absent from
+    the codebook (sparse-id corpus) sums to NULL and is filtered out."""
+    cand = ", ".join(f"struct(round({d}, 9) AS d2, CAST({c} AS BIGINT)"
+                     f" AS code)" for c, d in enumerate(dist_cols))
+    return f"array_min(filter(array({cand}), x -> x.d2 IS NOT NULL))"
+
+
+def _pq_wide(codebook: DataFrame, num_codes: int) -> DataFrame:
+    """Pivot a long (code, pos, cx) codebook to one row per vector
+    position carrying every code's component as ``_cb<c>`` (dim rows x
+    num_codes doubles — broadcast-bounded for any codebook source)."""
+    return (codebook.groupBy("pos")
+            .agg(*[F.expr(f"max(CASE WHEN code = {c} THEN cx END)"
+                          f" AS _cb{c}") for c in range(num_codes)]))
+
+
+def _pq_sums(rows: DataFrame, keys: list[str], cbw: DataFrame, m: int,
+             num_codes: int, dsub: int) -> DataFrame:
+    """The one PQ distance aggregate: (keys..., pos, x) rows meet the
+    pos-pivoted codebook through a broadcast join, then ONE hash-agg
+    at ``keys`` grain emits m x num_codes conditional sums
+    ``_d<s>_<c>`` = squared distance of subvector s to code c.  All
+    rows of a group come from one source row in ascending pos order,
+    so the partial agg completes map-side and every sum folds in
+    ascending position order (the order the oracle SQL replays)."""
+    return (rows.join(F.broadcast(cbw), "pos")
+            .groupBy(*keys)
+            .agg(*[F.expr(
+                f"sum(CASE WHEN CAST(pos / {dsub} AS INT) = {s} THEN"
+                f" (x - _cb{c}) * (x - _cb{c}) END) AS _d{s}_{c}")
+                for s in range(m) for c in range(num_codes)]))
+
+
+def _pq_codes(sums: DataFrame, keys: list[str], m: int,
+              num_codes: int) -> DataFrame:
+    """(keys..., _codes): the m-entry code vector, one in-row argmin
+    per subspace over ``_pq_sums`` output."""
+    codes = ", ".join(
+        _pq_argmin([f"_d{s}_{c}" for c in range(num_codes)]) + ".code"
+        for s in range(m))
+    return sums.select(*keys, F.expr(f"array({codes}) AS _codes"))
+
+
+def _pq_adc(codes: DataFrame, qsums: DataFrame, id_col: str,
+            query_id: str, on: list[str], m: int, num_codes: int,
+            k: int) -> DataFrame:
+    """Asymmetric distance computation + top-k.  Each query's
+    ``_pq_sums`` row becomes one m x num_codes distance matrix (9dp
+    per entry); candidates meet the broadcast matrices through a cross
+    join (``on`` empty) or an equi-join on ``on`` (IVF cell), and
+    adist = round(sum of m matrix lookups in ascending sub, 6)."""
+    pdm = "array(" + ", ".join(
+        "array(" + ", ".join(f"round(_d{s}_{c}, 9)"
+                             for c in range(num_codes)) + ")"
+        for s in range(m)) + ")"
+    dtab = F.broadcast(qsums.select(query_id, *on,
+                                    F.expr(f"{pdm} AS _pdm")))
+    pairs = codes.join(dtab, on) if on else codes.crossJoin(dtab)
+    adist = " + ".join(f"_pdm[{s}][_codes[{s}]]" for s in range(m))
+    scored = (pairs.filter(F.col(id_col) != F.col(query_id))
+              .select(query_id, F.col(id_col),
+                      F.expr(f"round({adist}, 6)").alias("adist")))
+    return _top_k(scored, query_id, F.col("adist"), id_col, k)
+
+
 def pq_codebook(corpus: DataFrame, id_col: str, vec_col: str,
                 m: int = 4, num_codes: int = 16,
                 dim: int | None = None) -> DataFrame:
@@ -338,11 +463,7 @@ def pq_codebook(corpus: DataFrame, id_col: str, vec_col: str,
     by replacing this one table; the encode/search plans are
     unchanged).  The codebook is m * num_codes * dim/m doubles — always
     broadcastable, regardless of corpus size."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
     cents = _subspace_explode(
         corpus.filter(F.col(id_col) < num_codes), id_col, vec_col,
         m, dsub, "code")
@@ -359,14 +480,12 @@ def pq_codebook_trained(corpus: DataFrame, id_col: str, vec_col: str,
     ``lloyd_iters`` k-means rounds PER SUBSPACE: assign every corpus
     subvector to its nearest (L2) code, then recompute each code as the
     elementwise mean of its assigned subvectors — the same long-format
-    elementwise-mean machinery as the IVF coarse refinement, but the
-    codebook relation never visits the driver (it is localCheckpoint'd
-    per round to truncate lineage; m*num_codes*dim/m doubles, always
-    executor-resident and broadcastable).
+    elementwise-mean machinery as the IVF coarse refinement.
 
-    One Lloyd round costs: broadcast-join of the exploded corpus against
-    the codebook, a (id, sub, code) distance agg, an argmin hash-agg
-    (map-side combinable min-over-struct, no ranking window), and a
+    One Lloyd round costs: a ``pq_encode`` against the current
+    codebook (the assignment — the same argmin as search, so training
+    and serving cannot disagree on the nearest code), an equi-join of
+    the assignment back onto the exploded corpus, and a
     (sub, code, spos) mean — all shuffles key on uniform hash keys.
     Codes that capture no subvectors keep their previous centroid, so
     the codebook never shrinks.
@@ -375,21 +494,13 @@ def pq_codebook_trained(corpus: DataFrame, id_col: str, vec_col: str,
     across engines — the FIXED codebook stays the oracle twin
     (``ann_pq_topk``); this variant trades that for measurably higher
     ADC recall (asserted in tests against brute-force cosine)."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    cb = pq_codebook(corpus, id_col, vec_col, m, num_codes, dim)
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
+    cb = pq_codebook(corpus, id_col, vec_col, m, num_codes, dsub * m)
     ex = _subspace_explode(corpus, id_col, vec_col, m, dsub, id_col)
     for _ in range(max(0, lloyd_iters)):
-        d2 = (ex.join(F.broadcast(cb), ["sub", "spos"])
-              .groupBy(id_col, "sub", "code")
-              .agg(F.sum((F.col("x") - F.col("cx")) ** 2).alias("d2")))
-        best = (d2.groupBy(id_col, "sub")
-                .agg(F.min(F.struct(F.col("d2"), F.col("code"))).alias("_m"))
-                .select(id_col, "sub", F.col("_m.code").alias("code")))
-        means = (ex.join(best, [id_col, "sub"])
+        best = pq_encode(corpus, id_col, vec_col, m, num_codes, dsub * m,
+                         codebook=cb)
+        means = (ex.join(best.select(id_col, "sub", "code"), [id_col, "sub"])
                  .groupBy("sub", "code", "spos")
                  .agg(F.avg("x").alias("_new")))
         # per-round driver pull (the ivf_topk pattern): the refreshed
@@ -418,49 +529,30 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
     corpus compresses from ``dim`` floats to ``m`` small ints per
     vector (64 doubles -> 4 bytes at m=4/K=16: a 128x cut for the
     resident ANN index).  The plan is one posexplode + broadcast
-    codebook join + (id, sub, code) hash-agg + per-(id, sub) argmin
-    as a min-over-struct hash-agg (map-side combinable — collapses to
-    one row per (id, sub) BEFORE the shuffle, where a ranking window
-    would shuffle all K candidate rows and sort) — no cross join,
-    corpus side never collected.  The candidate expansion stays
-    long-format deliberately: the expanded relation lives inside one
-    whole-stage-codegen stage and is never shuffled, which beats an
-    in-row array fold (higher-order functions are interpreted,
-    not codegen'd)."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+    codebook join + ONE hash-agg at (id, sub) grain with the
+    ``_pq_argmin`` nearest-code rule in-row — no ranking window, no
+    cross join, corpus side never collected.  The candidate expansion
+    stays long-format deliberately: the expanded relation lives inside
+    one whole-stage-codegen stage and is never shuffled, which beats an
+    in-row array fold (higher-order functions are interpreted, not
+    codegen'd)."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
     if codebook is None:
-        codebook = pq_codebook(corpus, id_col, vec_col, m, num_codes, dim)
+        codebook = pq_codebook(corpus, id_col, vec_col, m, num_codes,
+                               dsub * m)
     ex = _subspace_explode(corpus, id_col, vec_col, m, dsub, id_col)
-    # ONE hash-agg at (id, sub) grain: the per-code distances pivot into
-    # ``num_codes`` conditional sums (every (sub, spos) row matches every
-    # code through the broadcast join, so each sum sees exactly dsub
-    # terms), and the argmin is an in-row lexicographic array_min over
-    # (round(d2, 9), code) structs — identical tie-breaking to the
-    # previous min-over-struct agg, but the shuffle now moves one
-    # num_codes-wide row per (id, sub) instead of num_codes one-row
-    # partials (16x less traffic at the r12 constants), and the second
-    # argmin shuffle is gone entirely.  All rows of an (id, sub) group
-    # originate from one corpus row, so the partial agg completes
-    # map-side and the summation-order/round-9 convention is unchanged.
-    # (expressions built as SQL text: one py4j round-trip per
-    # aggregate instead of ~6 Column-API calls each — construction
-    # time is inside the measured query wall)
+    # the per-code distances pivot into ``num_codes`` conditional sums
+    # (every (sub, spos) row matches every code through the broadcast
+    # join, so each sum sees exactly dsub terms): the shuffle moves one
+    # num_codes-wide row per (id, sub), and since all rows of a group
+    # come from one corpus row the partial agg completes map-side.
+    # This grain (not _pq_sums' id grain) needs no codebook pivot.
     agg = (ex.join(F.broadcast(codebook), ["sub", "spos"])
            .groupBy(id_col, "sub")
            .agg(*[F.expr(f"sum(CASE WHEN code = {c} THEN"
                          f" (x - cx) * (x - cx) END) AS _d{c}")
                   for c in range(num_codes)]))
-    # a code id absent from the codebook (sparse-id corpus) sums to
-    # NULL — drop it before the argmin, as the join previously did
-    cand = ", ".join(f"struct(round(_d{c}, 9) AS d2,"
-                     f" CAST({c} AS BIGINT) AS code)"
-                     for c in range(num_codes))
-    best = F.expr(f"array_min(filter(array({cand}),"
-                  f" s -> s.d2 IS NOT NULL))")
+    best = F.expr(_pq_argmin([f"_d{c}" for c in range(num_codes)]))
     return (agg.withColumn("_best", best)
             .select(id_col, "sub", F.col("_best.code").alias("code"),
                     F.round(F.col("_best.d2"), 6).alias("d2")))
@@ -480,80 +572,33 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     Exactness is traded per-subspace; rerank the top-k' with
     ``cosine_topk`` when recall matters.
 
-    r14 plan shape (the ivfpq_topk treatment, guide §2.3/§2.4): the
-    codebook pivots WIDE on (sub, spos) — one broadcast row per vector
-    position carrying every code's component — so corpus encode is ONE
-    hash-agg at id grain (m x num_codes conditional sums, in-row
-    argmin per subspace -> the full m-entry code vector) instead of
-    the former per-(id, sub) agg; the per-query distance tables pivot
-    to one broadcast row per query carrying an m x num_codes matrix;
-    and ADC is an in-row sum of m matrix lookups over the broadcast
-    query-set cross — the former (sub, code) equi-join fan-out
-    (m x |Q| rows per corpus id through a shuffle + (query, id)
-    hash-agg) disappears.  The query side stays the broadcast-bounded
-    relation it always was (queries x m x K doubles); batch very large
-    query sets exactly as ``cosine_topk`` documents.  Arithmetic
-    replays the former fold orders (ascending-spos sums per
-    (sub, code), round-9 pd, round-6 adist) — the oracle SQL is
-    unchanged and byte-exact at every tested SF."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+    Plan shape: the codebook pivots wide on vector position
+    (``_pq_wide``), so corpus encode is ONE hash-agg at id grain whose
+    in-row argmins give the full m-entry code vector, and the queries'
+    distance tables come out of the same aggregate; ADC is an in-row
+    sum of m matrix lookups over the broadcast query-set cross — no
+    (sub, code) equi-join fan-out through a shuffle.  The query side is
+    broadcast-bounded (queries x m x K doubles); batch very large query
+    sets exactly as ``cosine_topk`` documents.  Per-(sub, code) sums
+    fold in ascending position order, pd rounds to 9dp and adist to
+    6dp, which the oracle SQL replays byte-exactly."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
     if codebook is None:
-        codebook = pq_codebook(corpus, id_col, vec_col, m, num_codes, dim)
-    # pos-pivoted codebook: one row per (sub, spos) with every code's
-    # component (dim rows x num_codes doubles — broadcast-bounded by
-    # construction, any codebook source incl. the Lloyd-trained one).
-    # All wide expression lists here are SQL text — ONE py4j round-trip
-    # each instead of ~8 Column-API calls: construction time is inside
-    # the measured query wall (the r13 pq_encode lesson; re-measured
-    # r14 after a Column-API draft cost 3+ s/plan to BUILD)
-    cbw = (codebook.groupBy("sub", "spos")
-           .agg(*[F.expr(f"max(CASE WHEN code = {c} THEN cx END)"
-                         f" AS _cb{c}") for c in range(num_codes)]))
+        codebook = pq_codebook(corpus, id_col, vec_col, m, num_codes,
+                               dsub * m)
+    cbw = _pq_wide(codebook.select(
+        "code", (F.col("sub") * dsub + F.col("spos")).alias("pos"), "cx"),
+        num_codes)
 
-    def dist_sums(vdf: DataFrame, out_id: str, prefix: str) -> DataFrame:
-        """ONE hash-agg at vector grain: m x num_codes conditional sums
-        of squared distance.  All rows of a group originate from one
-        source row in ascending (sub, spos) order, so the partial agg
-        completes map-side and each sum replays the ascending-spos
-        accumulation of the former per-(id/query, sub, code) aggs."""
-        ex = _subspace_explode(vdf, id_col, vec_col, m, dsub, out_id)
-        terms = ex.join(F.broadcast(cbw), ["sub", "spos"])
-        return (terms.groupBy(out_id)
-                .agg(*[F.expr(f"sum(CASE WHEN sub = {s} THEN"
-                              f" (x - _cb{c}) * (x - _cb{c}) END)"
-                              f" AS {prefix}{s}_{c}")
-                       for s in range(m) for c in range(num_codes)]))
+    def sums(vdf: DataFrame, out_id: str) -> DataFrame:
+        rows = _as_double(vdf, vec_col).select(
+            F.col(id_col).alias(out_id),
+            F.posexplode(vec_col).alias("pos", "x"))
+        return _pq_sums(rows, [out_id], cbw, m, num_codes, dsub)
 
-    enc = dist_sums(corpus, id_col, "_d")
-    code_cols = []
-    for s in range(m):
-        cand = ", ".join(f"struct(round(_d{s}_{c}, 9) AS d2,"
-                         f" CAST({c} AS BIGINT) AS code)"
-                         for c in range(num_codes))
-        code_cols.append(
-            f"array_min(filter(array({cand}), x -> x.d2 IS NOT NULL)).code")
-    codes = enc.select(F.col(id_col),
-                       F.expr(f"array({', '.join(code_cols)}) AS _codes"))
-
-    dagg = dist_sums(queries, query_id, "_p")
-    pdm = "array(" + ", ".join(
-        "array(" + ", ".join(f"round(_p{s}_{c}, 9)"
-                             for c in range(num_codes)) + ")"
-        for s in range(m)) + ")"
-    dtab = dagg.select(F.col(query_id), F.expr(f"{pdm} AS _pdm"))
-
-    adist_expr = " + ".join(f"_pdm[{s}][_codes[{s}]]" for s in range(m))
-    adist = (codes.crossJoin(F.broadcast(dtab))
-             .filter(F.col(id_col) != F.col(query_id))
-             .select(query_id, F.col(id_col),
-                     F.expr(f"round({adist_expr}, 6)").alias("adist")))
-    w = Window.partitionBy(query_id).orderBy(F.col("adist"), F.col(id_col))
-    return (adist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    codes = _pq_codes(sums(corpus, id_col), [id_col], m, num_codes)
+    return _pq_adc(codes, sums(queries, query_id), id_col, query_id, [],
+                   m, num_codes, k)
 
 
 def normalize_embeddings(df: DataFrame, id_col: str,
@@ -608,20 +653,8 @@ def pq_rerank_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     cand = pq_topk(corpus, queries, id_col, vec_col, k=k_cand, m=m,
                    num_codes=num_codes, dim=dim, codebook=codebook,
                    query_id=query_id)
-    cvec = _as_double(corpus, vec_col).select(
-        F.col(id_col), F.col(vec_col).alias("_cv"))
-    qvec = _as_double(queries, vec_col).select(
-        F.col(id_col).alias(query_id), F.col(vec_col).alias("_qv"))
-    sim = (cand.select(query_id, id_col)
-           .join(cvec, id_col)
-           .join(F.broadcast(qvec), query_id)
-           .select(query_id, id_col,
-                   F.round(L.cosine_similarity("_qv", "_cv"), 6)
-                   .alias("cosine")))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _cosine_rerank(cand, corpus, queries, id_col, vec_col, k,
+                          query_id)
 
 
 def rank_eval(pred: DataFrame, truth: DataFrame,
@@ -676,49 +709,30 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     corpus vectors — both DERIVED relations (a filter of the corpus),
     broadcast on every use; identical broadcast subplans canonicalize
     so Spark's ReuseExchange rule materializes each ONCE per
-    execution (round 11's eager ``localCheckpoint`` here measured
-    slower — see git history — and stays out).
+    execution (an eager ``localCheckpoint`` here measured slower).
 
-    r14 plan shape (r13 verdict #3; guide §2.3/§2.4 — the
-    kmeans_assign treatment): the former long-format pipeline
-    re-derived the corpus/centroid/codebook subtrees per consumer (32
-    parquet scans, 40 exchanges, 9 windows at the registry
-    constants).  Now
+    Plan shape:
 
     - **cell assignment is IN-ROW, zero shuffles**: the num_cells
       centroids pivot into ONE broadcast row of (cell, vec, norm)
-      structs; per-vector cosines are an in-row transform (the same
-      rounded fold as before) and the corpus argmax / query
-      top-nprobe are array_max / reverse(array_sort) over those
-      structs — the per-vector hash-agg and the per-query ranking
-      window are gone;
+      structs; per-vector cosines are an in-row transform and the
+      corpus argmax / query top-nprobe are array_max /
+      reverse(array_sort) over those structs — no per-vector
+      hash-agg, no per-query ranking window;
     - **residual + encode is one codegen pass**: posexplode AFTER the
       in-row assignment (no corpus-grain assignment join), one
-      broadcast join each for the centroid component and the
-      pos-pivoted codebook (one row per vector position carrying
-      every code's component), then ONE hash-agg at (id, cell) grain
-      with m x num_codes conditional sums whose in-row argmins yield
-      the full m-entry code vector — where the former shape paid a
-      per-(id, cell, sub) agg and re-derived the residual subtree
-      for the codebook;
-    - **ADC is a broadcast lookup, not an equi-join fan-out**: the
-      per-query distance tables pivot to queries x nprobe broadcast
-      rows carrying an m x num_codes matrix; candidates meet through
-      a (cell) broadcast join and adist is an in-row sum of m
-      matrix lookups — the only remaining exchanges are the two
-      tiny pivots, the encode agg, and the final rank window.
+      broadcast join for the centroid component, then the PQ kernel
+      (``_pq_sums`` keyed by (id, cell) against the ``_pq_wide``
+      residual codebook, ``_pq_codes`` in-row);
+    - **ADC is a broadcast lookup, not an equi-join fan-out**
+      (``_pq_adc``): queries x nprobe distance matrices meet the
+      candidates through a (cell) broadcast join — the only exchanges
+      are the two tiny pivots, the encode agg, and the rank window.
 
-    Arithmetic is bit-identical to the long-format shape (same
-    rounded cosine fold, same ascending-spos summation inside each
-    (sub, code) distance — the in-row fold replays the map-side
-    accumulation order — same round-9-then-argmin tie-break, same
-    round-6 adist): the oracle SQL is unchanged and byte-exact at
-    every tested SF."""
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+    Cosines round to 9dp before the argmax, per-(sub, code) sums fold
+    in ascending position order, pd rounds to 9dp and adist to 6dp,
+    which the oracle SQL replays byte-exactly."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
 
     # ONE-row pivoted coarse-centroid relation: num_cells
     # (cell, vec, norm) structs sorted by cell, broadcast everywhere
@@ -732,9 +746,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
 
     def with_sims(vdf: DataFrame, out_id: str) -> DataFrame:
         """(out_id, _vv, _sims) where _sims[i] = (cosine vs centroid
-        i rounded to 9dp, -cell) — the same rounded fold and argmax
-        tie-break structs as the former per-(vector, cell) relation,
-        computed in-row against the broadcast pivoted centroids."""
+        i rounded to 9dp, -cell): max over the structs is the argmax
+        with ties to the lower cell."""
         v = (_as_double(vdf, vec_col)
              .select(F.col(id_col).alias(out_id),
                      F.col(vec_col).alias("_vv"),
@@ -748,96 +761,52 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
         return (v.crossJoin(F.broadcast(cw))
                 .select(out_id, "_vv", sims.alias("_sims")))
 
-    # corpus assignment: in-row argmax (max (sim, -cell) struct —
-    # identical comparator to the former map-side struct agg)
     asg = (with_sims(corpus, id_col)
            .select(F.col(id_col), "_vv",
                    (-F.array_max("_sims")["nc"]).cast("int")
                    .alias("_cell")))
 
-    # long-format centroid components for the residual join (codegen
+    # long-format centroid components for the residual join (a codegen
     # broadcast hash join beats an in-row interpreted lookup at
-    # dim-grain — the pq_encode long-format lesson)
+    # dim grain)
     cents = (_as_double(corpus, vec_col)
              .filter(F.col(id_col) < num_cells)
              .select(F.col(id_col).cast("int").alias("_cell"),
                      F.posexplode(vec_col).alias("pos", "cx")))
 
     def residual_pos(adf: DataFrame, out_id: str) -> DataFrame:
-        """(out_id, _cell, pos, rx): posexplode after the in-row
-        assignment, one broadcast join for the centroid component."""
+        """(out_id, _cell, pos, x) with x the residual component:
+        posexplode after the in-row assignment, one broadcast join for
+        the centroid component."""
         vex = adf.select(out_id, "_cell",
                          F.posexplode("_vv").alias("pos", "x"))
         return (vex.join(F.broadcast(cents), ["_cell", "pos"])
                 .select(out_id, "_cell", "pos",
-                        (F.col("x") - F.col("cx")).alias("rx")))
+                        (F.col("x") - F.col("cx")).alias("x")))
 
-    rex = residual_pos(asg, id_col)
-
-    # shared residual codebook (residuals of the first num_codes
-    # corpus vectors w.r.t. their own cells), pivoted WIDE on pos:
-    # one row per vector position carrying every code's component —
-    # 64 rows at the registry constants, broadcast to both consumers
-    # (SQL-text aggregates: one py4j round-trip each — the r13
-    # construction-cost lesson, construction is inside the query wall)
-    cbw = (residual_pos(asg.filter(F.col(id_col) < num_codes), id_col)
-           .groupBy("pos")
-           .agg(*[F.expr(f"max(CASE WHEN {id_col} = {c} THEN rx END)"
-                         f" AS _cb{c}") for c in range(num_codes)]))
-
-    def dist_sums(pdf: DataFrame, out_id: str, prefix: str) -> DataFrame:
-        """ONE hash-agg at (out_id, _cell) grain: m x num_codes
-        conditional sums of (rx - cb)^2.  All rows of a group
-        originate from one source row in ascending pos order, so the
-        partial agg completes map-side and each sum replays the
-        ascending-spos accumulation the long-format shape used."""
-        terms = pdf.join(F.broadcast(cbw), "pos")
-        return (terms.groupBy(out_id, "_cell")
-                .agg(*[F.expr(
-                    f"sum(CASE WHEN CAST(pos / {dsub} AS INT) = {s} THEN"
-                    f" (rx - _cb{c}) * (rx - _cb{c}) END)"
-                    f" AS {prefix}{s}_{c}")
-                    for s in range(m) for c in range(num_codes)]))
-
-    # PQ encode: in-row argmin per subspace over (round(d2, 9), code)
-    # structs — identical tie-breaking to the former per-sub agg
-    enc = dist_sums(rex, id_col, "_d")
-    code_cols = []
-    for s in range(m):
-        cand = ", ".join(f"struct(round(_d{s}_{c}, 9) AS d2, {c} AS code)"
-                         for c in range(num_codes))
-        code_cols.append(
-            f"array_min(filter(array({cand}), x -> x.d2 IS NOT NULL)).code")
-    codes = enc.select(F.col(id_col), "_cell",
-                       F.expr(f"array({', '.join(code_cols)}) AS _codes"))
+    # shared residual codebook: residuals of the first num_codes corpus
+    # vectors w.r.t. their own cells (code = vector id)
+    cbw = _pq_wide(
+        residual_pos(asg.filter(F.col(id_col) < num_codes), id_col)
+        .select(F.col(id_col).alias("code"), "pos",
+                F.col("x").alias("cx")), num_codes)
+    codes = _pq_codes(
+        _pq_sums(residual_pos(asg, id_col), [id_col, "_cell"], cbw, m,
+                 num_codes, dsub), [id_col, "_cell"], m, num_codes)
 
     # query probing: in-row top-nprobe (reverse(array_sort) over the
-    # (sim, -cell) structs = sim desc, cell asc — the former window's
-    # order), then the same residual + distance pass as the corpus
+    # (sim, -cell) structs = sim desc, cell asc), then the same
+    # residual + distance pass as the corpus
     qa = (with_sims(queries, query_id)
           .select(query_id, "_vv",
                   F.explode(F.slice(F.reverse(F.array_sort("_sims")),
                                     1, max(1, nprobe))).alias("_ps"))
           .select(query_id, "_vv",
                   (-F.col("_ps.nc")).cast("int").alias("_cell")))
-    dagg = dist_sums(residual_pos(qa, query_id), query_id, "_p")
-    pdm = "array(" + ", ".join(
-        "array(" + ", ".join(f"round(_p{s}_{c}, 9)"
-                             for c in range(num_codes)) + ")"
-        for s in range(m)) + ")"
-    dtab = dagg.select(query_id, "_cell", F.expr(f"{pdm} AS _pdm"))
-
-    # ADC: candidates meet through a (cell) broadcast join; adist is
-    # an in-row sum of m distance-table lookups (ascending sub — the
-    # deterministic replay of the former (cell, sub, code) join+agg)
-    adist_expr = " + ".join(f"_pdm[{s}][_codes[{s}]]" for s in range(m))
-    adist = (codes.join(F.broadcast(dtab), "_cell")
-             .filter(F.col(id_col) != F.col(query_id))
-             .select(query_id, F.col(id_col),
-                     F.expr(f"round({adist_expr}, 6)").alias("adist")))
-    w = Window.partitionBy(query_id).orderBy(F.col("adist"), F.col(id_col))
-    return (adist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    qsums = _pq_sums(residual_pos(qa, query_id), [query_id, "_cell"], cbw,
+                     m, num_codes, dsub)
+    return _pq_adc(codes, qsums, id_col, query_id, ["_cell"], m,
+                   num_codes, k)
 
 
 def rrf_fuse(rankings: list[DataFrame], k: int = 5, c: int = 60,
@@ -863,9 +832,7 @@ def rrf_fuse(rankings: list[DataFrame], k: int = 5, c: int = 60,
         u = u.unionByName(p)
     fused = (u.groupBy(query_id, id_col)
              .agg(F.round(F.sum("_w"), 9).alias("rrf")))
-    w = Window.partitionBy(query_id).orderBy(F.desc("rrf"), F.col(id_col))
-    return (fused.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(fused, query_id, F.desc("rrf"), id_col, k)
 
 
 def ivfpq_rerank_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
@@ -881,20 +848,8 @@ def ivfpq_rerank_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     cand = ivfpq_topk(corpus, queries, id_col, vec_col, k=k_cand,
                       num_cells=num_cells, nprobe=nprobe, m=m,
                       num_codes=num_codes, dim=dim, query_id=query_id)
-    cvec = _as_double(corpus, vec_col).select(
-        F.col(id_col), F.col(vec_col).alias("_cv"))
-    qvec = _as_double(queries, vec_col).select(
-        F.col(id_col).alias(query_id), F.col(vec_col).alias("_qv"))
-    sim = (cand.select(query_id, id_col)
-           .join(cvec, id_col)
-           .join(F.broadcast(qvec), query_id)
-           .select(query_id, id_col,
-                   F.round(L.cosine_similarity("_qv", "_cv"), 6)
-                   .alias("cosine")))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _cosine_rerank(cand, corpus, queries, id_col, vec_col, k,
+                          query_id)
 
 
 def gram_matrix(df: DataFrame, vec_col: str = "embedding",
@@ -1024,10 +979,7 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, id_col: str,
            .select(query_id, id_col,
                    F.col(f"_c_{label_col}").alias("neg_label"),
                    "cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(id_col))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(sim, query_id, F.col("cosine").desc(), id_col, k)
 
 
 def ndcg_eval(pred: DataFrame, truth: DataFrame,

@@ -374,8 +374,10 @@ def ann_pq_codes(spark, sf):
     """Product-quantization encoding: every corpus vector compressed to
     m=4 subspace codes (nearest of 16 deterministic per-subspace
     centroids) — 64 doubles -> 4 small ints, the 100 TB ANN-index
-    memory path.  One posexplode + broadcast codebook join + hash-agg
-    + per-(id, sub) argmin window; the corpus is never collected."""
+    memory path.  One posexplode + broadcast codebook join + ONE
+    (id, sub) hash-agg with the nearest-code argmin in-row (no window,
+    one shuffle — pinned by tests/test_plans.py); the corpus is never
+    collected."""
     emb = T(spark, sf, "embeddings")
     out = S.pq_encode(emb, "vec_id", "embedding", m=PQ_M,
                       num_codes=PQ_CODES, dim=DIM)
@@ -412,7 +414,8 @@ def ann_pq_topk(spark, sf):
     each precomputing a broadcast m x 16 distance table; a candidate's
     approximate squared-L2 is the sum of m table lookups over its PQ
     codes — the scan side reads 4 ints per vector instead of 64
-    doubles.  codes ⋈ dtable equi-join + one (query, id) hash-agg."""
+    doubles.  The distance tables broadcast against the code vectors
+    and adist is an in-row sum of m lookups — no equi-join fan-out."""
     emb = T(spark, sf, "embeddings")
     out = S.pq_topk(emb, emb.filter(F.col("vec_id") < N_QUERIES),
                     "vec_id", "embedding", k=K, m=PQ_M,

@@ -450,6 +450,46 @@ def test_pq_codebook_vectors_encode_to_themselves(spark, sf_dir):
         assert r.code == r.vec_id and r.d2 == 0.0, r
 
 
+def test_pq_sparse_codebook_encode_and_adc_agree(spark):
+    """A corpus whose ids below num_codes are only {0, 5, 9} gives a
+    codebook with 3 of 16 code ids; the other 13 distance sums are
+    NULL.  Neither encode shape (pq_encode at (id, sub) grain, pq_topk
+    at id grain) may pick an absent code, and every pq_topk adist must
+    equal round(sum_s round(|q_s - cb[code_s]|^2, 9), 6) with code_s
+    taken from pq_encode — the two shapes agree code for code."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    def rnd(x, n):      # Spark's round(double, n): HALF_UP on repr
+        return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-n),
+                                               ROUND_HALF_UP))
+
+    m, dim, dsub = 2, 8, 4
+    rng = np.random.RandomState(5)
+    ids = [0, 5, 9] + list(range(20, 40))
+    vecs = {i: [float(x) for x in rng.randn(dim)] for i in ids}
+    df = spark.createDataFrame(sorted(vecs.items()),
+                               "vec_id bigint, embedding array<double>")
+    q = df.filter(F.col("vec_id").isin(0, 20, 21))
+    codes = {(r.vec_id, r.sub): r.code for r in
+             S.pq_encode(df, "vec_id", "embedding", m=m, num_codes=16,
+                         dim=dim).collect()}
+    assert len(codes) == len(ids) * m
+    assert set(codes.values()) <= {0, 5, 9}, set(codes.values())
+    got = S.pq_topk(df, q, "vec_id", "embedding", k=len(ids), m=m,
+                    num_codes=16, dim=dim).collect()
+    assert len(got) == 3 * (len(ids) - 1)
+    for r in got:
+        qv = vecs[r.query_id]
+        want = 0.0
+        for s in range(m):
+            cb = vecs[codes[(r.vec_id, s)]]
+            want += rnd(sum((qv[p] - cb[p]) ** 2
+                            for p in range(s * dsub, (s + 1) * dsub)), 9)
+        assert r.adist == rnd(want, 6), (r, want)
+
+
 def test_pq_topk_recall_vs_exact_l2(spark, sf_dir):
     """ADC over 4x16 codes is approximate; on the synthetic embeddings
     it must still land a usable fraction of the true L2 top-5."""
@@ -537,10 +577,15 @@ def test_write_zordered_files_are_disjoint_z_ranges(spark, tmp_path):
         assert ahi <= blo, f"overlapping z-ranges: {(alo, ahi)} {(blo, bhi)}"
 
 
-def test_pq_rejects_indivisible_dim(spark, sf_dir):
+@pytest.mark.parametrize("fn", ["pq_codebook", "pq_codebook_trained",
+                                "pq_encode", "pq_topk", "ivfpq_topk"])
+def test_pq_rejects_indivisible_dim(spark, sf_dir, fn):
+    """Every PQ entry point rejects m not dividing dim, at plan
+    construction (they share one subspace check)."""
     emb = load_table(spark, sf_dir, "embeddings")
+    args = (emb, emb) if fn.endswith("topk") else (emb,)
     with pytest.raises(ValueError, match="not divisible"):
-        S.pq_encode(emb, "vec_id", "embedding", m=5, num_codes=16, dim=64)
+        getattr(S, fn)(*args, "vec_id", "embedding", m=5, dim=64)
 
 
 def test_hll_distinct_accuracy_across_cardinalities(spark):
@@ -2186,6 +2231,21 @@ def test_min_label_shortcut_matches_rounds3(spark):
            for r in min_label_shortcut(path, nbr_rounds=2,
                                        jump_rounds=2).collect()}
     assert out == {(i, 0) for i in range(9)}
+
+
+def test_min_label_shortcut_rejects_bad_schedules(spark):
+    """nbr_rounds=0 used to run one hash-min round anyway (the first
+    round is built before the loop) and a negative jump_rounds meant 0;
+    both are now errors at plan construction."""
+    from fmx.operators.graph import min_label_shortcut
+
+    edges = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
+    for kw in ({"nbr_rounds": 0}, {"nbr_rounds": -1},
+               {"jump_rounds": -1}):
+        with pytest.raises(ValueError, match="nbr_rounds >= 1"):
+            min_label_shortcut(edges, **kw)
+    assert min_label_shortcut(edges, nbr_rounds=1, jump_rounds=0) \
+        .count() == 2
 
 
 def test_readability_known_values(spark):

@@ -348,8 +348,9 @@ def test_vocab_kl_no_corpus_cartesian(spark, sf_dir):
 
 
 def test_ivfpq_no_cartesian_no_collect(spark, sf_dir):
-    """IVF-PQ must meet candidates through the (cell, sub, code)
-    equi-join — no unbounded cartesian; the ONLY nested-loop allowed
+    """IVF-PQ must meet candidates through the (cell) broadcast join
+    against the per-query distance tables — no unbounded cartesian;
+    the ONLY nested-loop allowed
     is the broadcast cross against the bounded num_cells-row centroid
     table (BuildRight), and both the centroid table and the residual
     codebook must be derived relations (the plan contains only
