@@ -588,12 +588,6 @@ def incremental_dedup(new_docs: DataFrame, seen_hashes: DataFrame,
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-# bounded persist registry for semantic_dedup: the newest assignment
-# cache evicts the previous one (see the persist comment in
-# semantic_dedup)
-_SEM_CACHE: list = []
-
-
 def _argmax_cell(df: DataFrame, id_col: str, sim_col: str, cell_col: str,
                  carry: list[str]) -> DataFrame:
     """Deterministic per-id argmax over candidate cells as ONE hash
@@ -699,40 +693,21 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
         .withColumn("_s", L.vec_dot("_u", "_c2")),
         id_col, "_s", "_cell", carry=["_u"])
         .withColumnRenamed("_cell", "cell"))
-    # materialize the assignment EXECUTOR-SIDE: it feeds both sides of
-    # the pair self-join, and exchange reuse cannot deduplicate them
-    # (the outer join infers an IsNotNull only on its build side, so
-    # the two subtrees never canonicalize equal) — unpersisted, the
-    # whole two-level quantizer runs twice (measured 2x at sf0.1).
-    # The cache is n narrow rows (id, cell, unit vector) spread across
-    # executors' memory/disk — nothing passes through the driver, the
-    # same contract as the rest of the operator.  This is the artifact
-    # an ingest pipeline would persist anyway (cluster assignment is
-    # reused by mixture balancing and ANN indexing downstream).
-    # Leak bound: each call releases the PREVIOUS call's cache (at most
-    # one assignment stays resident per session; a still-referenced old
-    # result silently recomputes instead of breaking).  Same-plan calls
-    # are exempt: Spark's CacheManager dedupes persist() by canonical
-    # plan, so unpersisting an identical previous plan would drop the
-    # very cache this call just ensured (measured: re-running the same
-    # query went 2.2s -> 5.3s when this check was missing).
-    from pyspark import StorageLevel
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    if _SEM_CACHE and _SEM_CACHE[0] is not None:
-        prev = _SEM_CACHE[0]
-        try:
-            same = prev._jdf.queryExecution().analyzed().sameResult(
-                assigned._jdf.queryExecution().analyzed())
-        except Exception:
-            same = False
-        if not same:
-            prev.unpersist()
-    _SEM_CACHE[:] = [assigned]
+    # The assignment feeds both join sides.  The left join infers
+    # IsNotNull(cell, _id) on its build side only, which alone would keep
+    # the two subtrees from canonicalizing equal; filtering the shared
+    # projection gives both sides the same filter, so ReuseExchange runs
+    # the two-level quantizer once and the second side reads the reused
+    # cell exchange (no persist, nothing outlives the query).  Every
+    # assigned row has a cell; a NULL-id row, which has no identity to
+    # keep or drop, leaves the output.
+    pr = (assigned.filter(F.col("cell").isNotNull()
+                          & F.col(id_col).isNotNull())
+          .select(F.col(id_col).alias("_id"), "cell", "_u"))
     # LEFT self-join with the lower-id check as a RESIDUAL condition
     # keeps every assigned row in the pair relation itself (no third
     # join-back consumer).  shuffle_hash co-partitions both sides like
     # the scale plan without sort-merge's sort of wide vector rows.
-    pr = assigned.select(F.col(id_col).alias("_id"), "cell", "_u")
     a, b = pr.alias("a"), pr.alias("b")
     nn = (a.join(b.hint("shuffle_hash"),
                  (F.col("a.cell") == F.col("b.cell"))
@@ -919,8 +894,7 @@ def weighted_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 def allpairs_prefix_jaccard(df: DataFrame, id_col: str, text_col: str,
-                            n: int = 3, threshold: float = 0.4,
-                            materialize: bool = True) -> DataFrame:
+                            n: int = 3, threshold: float = 0.4) -> DataFrame:
     """EXACT all-pairs n-gram Jaccard >= threshold via prefix filtering
     (Bayardo et al., WWW'07 "Scaling Up All Pairs Similarity Search";
     the MapReduce formulation is Vernica et al., SIGMOD'10).  Returns
@@ -978,17 +952,12 @@ def allpairs_prefix_jaccard(df: DataFrame, id_col: str, text_col: str,
     # Net: tokenize -> one df aggregation -> one doc-grain aggregation;
     # the checkpointed relation is (id, s, ranked shingle array),
     # read by candidate generation (both sides) and both verify joins.
-    # 100 TB contract unchanged from r12: ``materialize=False`` trades
-    # the pinned executor-memory relation for map-only re-derivation
-    # of the tokenize+agg chain per consumer.
-    pairs, _docg = _allpairs_core(df, id_col, text_col, n, threshold,
-                                  materialize)
+    pairs, _docg = _allpairs_core(df, id_col, text_col, n, threshold)
     return pairs
 
 
 def _allpairs_core(df: DataFrame, id_col: str, text_col: str,
-                   n: int, threshold: float,
-                   materialize: bool) -> tuple[DataFrame, DataFrame]:
+                   n: int, threshold: float) -> tuple[DataFrame, DataFrame]:
     """Implementation of :func:`allpairs_prefix_jaccard`, additionally
     returning the checkpointed doc-grain relation (id, _s, _lst) so
     the canonical wrapper can reuse it (its id set IS the
@@ -1018,9 +987,8 @@ def _allpairs_core(df: DataFrame, id_col: str, text_col: str,
                     F.struct(F.col("_df").alias("d"),
                              F.col("shingle").alias("sh")))),
                 lambda x: x["sh"]).alias("_lst"))
-            .select(id_col, F.size("_lst").alias("_s"), "_lst"))
-    if materialize:
-        docg = docg.localCheckpoint(eager=False)
+            .select(id_col, F.size("_lst").alias("_s"), "_lst")
+            .localCheckpoint(eager=False))
     # p = s - floor(t*s) + 1 rarest shingles form the prefix index.
     # floor (not the canonical ceil) keeps every FP rounding error on
     # the SAFE side: p >= s - ceil(t*s) + 1 always, so a float blip can
@@ -1159,7 +1127,7 @@ def allpairs_prefix_jaccard_canonical(df: DataFrame, id_col: str,
             .select(F.col("_m._rid").alias("_rid"),
                     F.col("_m._text").alias("_text")))
     rp, docg = _allpairs_core(reps, "_rid", "_text",
-                              n=n, threshold=threshold, materialize=True)
+                              n=n, threshold=threshold)
     wgrp = Window.partitionBy("_h")
     mem = (df.select(F.col(id_col).alias("_id"),
                      F.md5(F.col(text_col)).alias("_h"))

@@ -18,7 +18,10 @@ those contracts; repr() is the compare because that is what the
 driver's hash distinguishes.
 """
 
+import math
+
 import duckdb
+import pandas as pd
 import pytest
 
 import fmx.queries as Q
@@ -51,12 +54,28 @@ def duck(sf_dir):
 def _canon_rows(df, cols):
     """repr rows via PYTHON scalars: cast to object (numpy scalars ->
     float/int, so a numpy>=2 repr change like np.int32(5) cannot red a
-    sentinel for non-engine reasons) and normalize missing values to
-    None on both connectors (r13 advice).  -0.0 and 1-ULP drift — the
+    sentinel for non-engine reasons) and normalize every NULL spelling
+    (None, pd.NA, NaT) to None on both connectors (r13 advice).  A
+    float NaN is a value, not a NULL: it stays NaN (repr 'nan'), so a
+    NULL-vs-NaN divergence reds.  -0.0 and 1-ULP drift — the
     divergences these sentinels exist for — survive the cast."""
     c = df[cols].astype(object)
-    c = c.where(c.notna(), None)
+    nan = c.map(lambda v: isinstance(v, float) and math.isnan(v))
+    null = c.isna() & ~nan
+    c = c.where(~null, None)
     return sorted(map(repr, c.itertuples(index=False, name=None)))
+
+
+def test_canon_rows_keeps_nan_and_null_distinct():
+    """An object column holding NaN and one holding NULL must not
+    canonicalize equal; the NULL spellings of the two connectors must."""
+    col = ["x"]
+    nan = pd.DataFrame({"x": pd.Series([float("nan")], dtype=object)})
+    null = pd.DataFrame({"x": pd.Series([None], dtype=object)})
+    na = pd.DataFrame({"x": pd.Series([pd.NA], dtype=object)})
+    assert _canon_rows(nan, col) != _canon_rows(null, col)
+    assert _canon_rows(null, col) == _canon_rows(na, col) == ["(None,)"]
+    assert _canon_rows(nan, col) == ["(nan,)"]
 
 
 @pytest.mark.parametrize("name", SENTINELS)
