@@ -950,8 +950,10 @@ def allpairs_prefix_jaccard(df: DataFrame, id_col: str, text_col: str,
     #   verify sets are two map-side projections of one relation.
     #
     # Net: tokenize -> one df aggregation -> one doc-grain aggregation;
-    # the checkpointed relation is (id, s, ranked shingle array),
-    # read by candidate generation (both sides) and both verify joins.
+    # that relation, (id, s, ranked shingle array), is read by
+    # candidate generation (both sides) and both verify joins, each
+    # through the same doc-grain exchange, which ReuseExchange runs
+    # once.
     pairs, _docg = _allpairs_core(df, id_col, text_col, n, threshold)
     return pairs
 
@@ -959,11 +961,10 @@ def allpairs_prefix_jaccard(df: DataFrame, id_col: str, text_col: str,
 def _allpairs_core(df: DataFrame, id_col: str, text_col: str,
                    n: int, threshold: float) -> tuple[DataFrame, DataFrame]:
     """Implementation of :func:`allpairs_prefix_jaccard`, additionally
-    returning the checkpointed doc-grain relation (id, _s, _lst) so
-    the canonical wrapper can reuse it (its id set IS the
-    shingle-bearing id set — the ``shingle_bearing`` predicate made
-    relational — and it is already materialized for the verify
-    joins, so the reuse is free)."""
+    returning the doc-grain relation (id, _s, _lst) so the canonical
+    wrapper can reuse it (its id set IS the shingle-bearing id set —
+    the ``shingle_bearing`` predicate made relational — and every
+    reader shares its doc-grain exchange, so the reuse is free)."""
     toks = df.select(F.col(id_col),
                      F.split(F.col(text_col), " ").alias("t"))
     sh = toks.select(
@@ -987,8 +988,7 @@ def _allpairs_core(df: DataFrame, id_col: str, text_col: str,
                     F.struct(F.col("_df").alias("d"),
                              F.col("shingle").alias("sh")))),
                 lambda x: x["sh"]).alias("_lst"))
-            .select(id_col, F.size("_lst").alias("_s"), "_lst")
-            .localCheckpoint(eager=False))
+            .select(id_col, F.size("_lst").alias("_s"), "_lst"))
     # p = s - floor(t*s) + 1 rarest shingles form the prefix index.
     # floor (not the canonical ceil) keeps every FP rounding error on
     # the SAFE side: p >= s - ceil(t*s) + 1 always, so a float blip can
@@ -1113,13 +1113,15 @@ def allpairs_prefix_jaccard_canonical(df: DataFrame, id_col: str,
     #   same exact integer min, one exchange, and the narrow groups
     #   relation disappears entirely;
     # - the within-group shingle-bearing filter reads the APSS core's
-    #   already-checkpointed doc-grain relation (its id set IS the
-    #   shingle-bearing representative set) instead of re-deriving
-    #   the representative texts and re-evaluating the predicate.
+    #   doc-grain relation (its id set IS the shingle-bearing
+    #   representative set) instead of re-deriving the representative
+    #   texts and re-evaluating the predicate.
     #
-    # Text columns are still never checkpointed or pinned (the r11
-    # advice): the only materialized relations are the narrow member
-    # table and the APSS core's (id, size, ranked-shingle) relation.
+    # Nothing is checkpointed or pinned: the member table and the APSS
+    # core's (id, size, ranked-shingle) relation are each read several
+    # times in the one action, always through the same exchange (the
+    # fingerprint window's, the doc-grain aggregation's), which
+    # ReuseExchange runs once; only the operators above it rerun.
     reps = (df.groupBy(F.md5(F.col(text_col)).alias("_h"))
             .agg(F.min(F.struct(F.col(id_col).alias("_rid"),
                                 F.col(text_col).alias("_text")))
@@ -1131,8 +1133,7 @@ def allpairs_prefix_jaccard_canonical(df: DataFrame, id_col: str,
     wgrp = Window.partitionBy("_h")
     mem = (df.select(F.col(id_col).alias("_id"),
                      F.md5(F.col(text_col)).alias("_h"))
-           .select(F.min("_id").over(wgrp).alias("_rep"), "_id")
-           .localCheckpoint(eager=False))
+           .select(F.min("_id").over(wgrp).alias("_rep"), "_id"))
     ma = mem.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_ia"))
     mb = mem.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_ib"))
     cross = (rp.join(ma, "id_a").join(mb, "id_b")
@@ -1142,7 +1143,7 @@ def allpairs_prefix_jaccard_canonical(df: DataFrame, id_col: str,
     # within-group pairs: identical shingle sets, J = 1.0 — but only
     # for texts that HAVE shingles (< n tokens yields none and can
     # never pair).  docg's id set encodes exactly that predicate for
-    # the representatives, and it is already materialized.
+    # the representatives.
     shingled = docg.select(F.col("_rid").alias("_rep"))
     dupm = mem.join(shingled, "_rep")
     within = (dupm.withColumnRenamed("_id", "_ia")

@@ -15,10 +15,10 @@ hash-agg keyed on destination, one left join back to the node list —
 all equi-joins on uniform-ish keys (celebrity in-degree skew lands in
 the dst agg, which is map-side combinable; AQE splits what remains).
 The node count enters as a broadcast 1-row join, never a driver
-scalar.  For deep iteration counts callers should localCheckpoint
-every few rounds (same lineage discipline as the SGD loop); the
-fixed-iteration variants used in queries stay pure so any engine can
-replay them.
+scalar.  Every operator runs a fixed number of rounds, so lineage is
+bounded and nothing is checkpointed: a relation read twice in one
+action is shared by exchange reuse, when both reads reach it through
+the same exchange.
 """
 
 from __future__ import annotations
@@ -32,8 +32,7 @@ __all__ = ["pagerank", "triangle_count", "k_hop", "label_propagation",
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
-             iters: int = 3, damping: float = 0.85,
-             checkpoint_every: int | None = None) -> DataFrame:
+             iters: int = 3, damping: float = 0.85) -> DataFrame:
     """PageRank over a directed edge list: (node, rank).
 
     Every node must have out-degree >= 1 (undirected graphs encoded as
@@ -49,7 +48,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     n = F.broadcast(nodes.agg(F.count("*").alias("_nn")))
     ranks = (nodes.crossJoin(n)
              .select("node", (F.lit(1.0) / F.col("_nn")).alias("rank")))
-    for it in range(iters):
+    for _ in range(iters):
         inflow = (edges
                   .join(ranks.withColumnRenamed("node", src), src)
                   .join(deg, src)
@@ -65,8 +64,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                           + damping * F.coalesce(F.col("_inflow"),
                                                  F.lit(0.0)))
                          .alias("rank")))
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -105,10 +102,10 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int,
     min-aggregation: reached_{t+1} = min-hop over reached_t UNION
     (edges JOIN reached_t).  Joining the FULL reached set (not a
     delta frontier) keeps every round a pure join+agg replayable by
-    any engine; for deep k on long-diameter graphs switch to a delta
-    frontier + anti-join and localCheckpoint every few rounds (same
-    lineage discipline as pagerank).  Celebrity vertices fan out in
-    the dst agg, which is map-side combinable; AQE handles the rest.
+    any engine; for deep k on long-diameter graphs use the delta
+    frontier + anti-join form, ``bfs_distances``.  Celebrity vertices
+    fan out in the dst agg, which is map-side combinable; AQE handles
+    the rest.
     """
     reached = seeds.select(F.col(node).alias("node"),
                            F.lit(0).alias("hop"))
@@ -136,9 +133,9 @@ def label_propagation(edges: DataFrame, src: str = "src",
     hash-agg with map-side combine, and a per-node top-1 window whose
     partition size is bounded by the node's distinct neighbor-label
     count (cap degree upstream, as copurchase/triangle queries do).
-    Rounds are fixed and small; for deep propagation switch the
-    argmax to connected-components-style min-label (dedup stack) and
-    localCheckpoint between rounds.
+    Rounds are fixed and small; for propagation to convergence use
+    min-label connected components instead
+    (``fmx.operators.dedup.connected_components``).
     """
     und = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
            .unionByName(
@@ -178,9 +175,7 @@ def min_label_rounds(edges: DataFrame, rounds: int = 3,
     expressible as a finite SQL plan).  Per round: one equi-join of
     labels onto the neighbor side, one min-agg per node (map-side
     combinable), one left join back so isolated-this-round nodes keep
-    their label.  ``localCheckpoint(eager=False)`` between rounds
-    truncates the 3-references-per-round lineage growth (kcore_peel's
-    discipline).  For 100TB graphs with large diameters, switch to
+    their label.  For 100TB graphs with large diameters, switch to
     alternating large-/small-star rewiring (O(log d) rounds); the
     bounded-round form here is the verification-friendly spec.
     """
@@ -188,17 +183,12 @@ def min_label_rounds(edges: DataFrame, rounds: int = 3,
            .unionByName(
                edges.select(F.col(dst).alias("node"),
                             F.col(src).alias("nbr"))))
-    # und is STATIC across rounds but referenced by every round's join:
-    # one lazy checkpoint materializes the edge subtree (basket join +
-    # distinct) once instead of once per round, and pre-partitioning
-    # on the join key first means every round's neighbor join reuses
-    # the checkpointed partitioning — only the (tiny) label relation
-    # shuffles per round (bench: 10.4s -> ~6s at sf0.1)
-    und = und.repartition("nbr").localCheckpoint(eager=False)
+    # every round's join reads the SAME nbr exchange (run once), so
+    # only the (tiny) label relation shuffles per round
+    und = und.repartition("nbr")
     labels = (und.select("node").distinct()
               .select("node", F.col("node").alias("label")))
     for _ in range(int(rounds)):
-        labels = labels.localCheckpoint(eager=False)
         # closed-neighborhood min in ONE aggregation: neighbor labels
         # unioned with each node's own label, then min per node — the
         # (node, min) relation IS the next label table.  Identical
@@ -208,11 +198,10 @@ def min_label_rounds(edges: DataFrame, rounds: int = 3,
         # instead of two plus a join (guide §2.4) — measured ~9 AQE
         # jobs/round -> ~5 at sf0.1.
         # shuffled-hash join, build side = the node-grain label table
-        # (guide §3.1): the checkpointed edge relation carries no
-        # stats, so the planner sort-merges — re-sorting the full edge
-        # fan-out EVERY round; the hash build touches only each
-        # partition's label slice (two longs per node) while the edge
-        # side streams through its checkpointed partitioning.
+        # (guide §3.1): the planner would sort-merge — re-sorting the
+        # full edge fan-out EVERY round; the hash build touches only
+        # each partition's label slice (two longs per node) while the
+        # edge side streams through its nbr partitioning.
         # Measured r13: connected-components headliner 3.2 -> 2.3 s at
         # sf0.1, within 8% of an (un-scalable at 100 TB) broadcast of
         # the label table.  Scale contract: the build slice is
@@ -246,9 +235,9 @@ def min_label_shortcut(edges: DataFrame, nbr_rounds: int = 2,
       neighbor side" is the identity: min over the closed neighborhood
       = ``min(least(node, nbr))`` grouped by one endpoint.  The
       symmetric edge relation makes grouping by ``nbr`` equivalent to
-      grouping by ``node``, and grouping by ``nbr`` REUSES the
-      checkpointed edge partitioning — round 1 costs zero exchanges
-      beyond the edge materialization itself.
+      grouping by ``node``, and grouping by ``nbr`` REUSES the edge
+      relation's nbr partitioning — round 1 costs zero exchanges
+      beyond the edge repartition itself.
     - **Every label value is a live node id** (a closed-neighborhood
       min over existing ids), so the shortcut is a plain inner
       self-join; no left-join/coalesce fallback is needed.
@@ -265,16 +254,10 @@ def min_label_shortcut(edges: DataFrame, nbr_rounds: int = 2,
     (Observation-stop loop).  Labels never merge distinct components
     under either schedule.
 
-    Static-plan note: the label relation carries no lineage cut, so
-    the printed plan duplicates its subtree once per self-join side —
-    2^jump_rounds copies.  At the shipped (2, 2) schedule that is a
-    dozen cheap references to the ONE checkpointed edge RDD, and
-    runtime exchange reuse collapses them (measured: fewer scheduled
-    jobs and equal-or-better wall than per-round checkpoints, whose
-    construction cost 0.2-1.4 s of driver planning EACH).  A caller
-    running a much deeper jump schedule should re-introduce a
-    label checkpoint every few rounds — the exponential plan growth,
-    not the data, is what would bite first.
+    Static-plan note: the printed plan duplicates the label subtree
+    once per self-join side — 2^jump_rounds copies — which runtime
+    exchange reuse collapses to one execution each.  A much deeper
+    jump schedule would pay for that growth in driver planning time.
 
     Raises ``ValueError`` unless ``nbr_rounds >= 1`` (the first
     hash-min round always runs) and ``jump_rounds >= 0``."""
@@ -286,24 +269,15 @@ def min_label_shortcut(edges: DataFrame, nbr_rounds: int = 2,
            .unionByName(
                edges.select(F.col(dst).alias("node"),
                             F.col(src).alias("nbr"))))
-    # static across rounds; pre-partition on the join key so the one
-    # remaining edge-grain join reuses the checkpointed partitioning
-    # (same discipline as min_label_rounds)
-    und = und.repartition("nbr").localCheckpoint(eager=False)
+    # round 1's aggregation and the edge-grain join read the same nbr
+    # exchange, run once (as in min_label_rounds)
+    und = und.repartition("nbr")
     labels = (und.groupBy("nbr")
               .agg(F.min(F.least(F.col("node"), F.col("nbr")))
                    .alias("label"))
               .select(F.col("nbr").alias("node"), "label"))
-    # No per-round label checkpoints (r14, measured): each
-    # localCheckpoint call costs a 0.2-1.4 s driver-side planning pass
-    # at construction, while the double references inside one action
-    # (labels feeds both sides of every self-join and both branches of
-    # the union) canonicalize to the SAME exchange, which Spark's
-    # ReuseExchange materializes once.  Lineage depth is bounded by
-    # the schedule length — O(log diameter) rounds by design — so the
-    # only relation that still warrants a lineage cut is the
-    # multi-referenced EDGE subtree above.  Interleaved A/B at sf0.1:
-    # equal-or-better wall, one fewer scheduled job, identical values.
+    # labels feeds both sides of every self-join and both union
+    # branches through the SAME exchange, which ReuseExchange runs once
     for _ in range(int(nbr_rounds) - 1):
         msgs = (und.join(labels.withColumnRenamed("node", "nbr")
                          .hint("shuffle_hash"), "nbr")
@@ -358,23 +332,29 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 3,
     join+agg discipline as pagerank/k_hop, so any engine can replay
     it (the oracle unrolls the rounds).  Fixed rounds keep the plan
     finite; for exact cores on deep cascades, loop until the survivor
-    count stops changing with localCheckpoint every few rounds."""
-    und = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-           .unionAll(edges.select(F.col(dst).alias("node"),
-                                  F.col(src).alias("nbr"))))
+    count stops changing, the way
+    ``fmx.operators.dedup.connected_components`` loops to
+    convergence."""
+    # every round reads the edges again: one exchange right after the
+    # caller's relation lets each round read it there (a derived edge
+    # list, e.g. the co-purchase pairs' distinct, is finalized once,
+    # not once per round), and an in-row explode, not a union of two
+    # reads, gives both directions from that one read
+    und = (edges.repartition(src).select(F.explode(F.array(
+        F.struct(F.col(src).alias("node"), F.col(dst).alias("nbr")),
+        F.struct(F.col(dst).alias("node"), F.col(src).alias("nbr"))))
+        .alias("_e")).select("_e.node", "_e.nbr"))
     # `rounds` degree-filters total: rounds-1 subgraph restrictions,
-    # then the final degree/filter IS the last round's peel.  Each
-    # round references `und` three times (degree agg + both survivor
-    # joins), so without a lineage break the edge subtree re-derives
-    # ~3^rounds times; the lazy localCheckpoint truncates lineage at
-    # execution (no job at plan-construction time — pagerank's
-    # discipline).
+    # then the final degree/filter IS the last round's peel.  Both
+    # survivor joins read the SAME ``keep`` (no rename), so its
+    # exchange is built once per round; inner joins, because the
+    # optimizer pushes semi-joins into the edge subtree, unsharing it.
     for _ in range(int(rounds) - 1):
-        und = und.localCheckpoint(eager=False)
         deg = und.groupBy("node").agg(F.count("*").alias("degree"))
-        keep = deg.filter(F.col("degree") >= int(k)).select("node")
-        und = (und.join(keep, "node")
-               .join(keep.withColumnRenamed("node", "nbr"), "nbr"))
+        keep = deg.filter(F.col("degree") >= int(k)).select(
+            F.col("node").alias("_k"))
+        und = (und.join(keep, F.col("node") == F.col("_k")).drop("_k")
+               .join(keep, F.col("nbr") == F.col("_k")).drop("_k"))
     return (und.groupBy("node").agg(F.count("*").alias("degree"))
             .filter(F.col("degree") >= int(k)))
 
@@ -434,8 +414,9 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
     Both compute the identical (node, min-hop) relation
     (tests/test_operators.py asserts equality); dist labels are exact
     by induction — a node enters the settled set at the first hop
-    that reaches it.  For unbounded diameters, localCheckpoint every
-    few rounds (the pagerank lineage discipline)."""
+    that reaches it.  For unbounded diameters, loop to an empty
+    frontier the way ``fmx.operators.dedup.connected_components``
+    loops to convergence."""
     und = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
            .unionByName(
                edges.select(F.col(dst).alias("node"),

@@ -1380,55 +1380,62 @@ def dedup_minhash_band_tuning(spark, sf):
     / 8x1.  More bands = higher recall + more candidates; this is the
     capacity-planning readout that picks the banding BEFORE the
     banded equi-join runs at corpus scale (candidate count IS the
-    shuffle bill).  One signature relation feeds all three configs;
-    the exact-Jaccard scorer reuses the max_df-guarded shingle pair
+    shuffle bill).  One signature relation and one banded self-join
+    serve all three configs; the exact-Jaccard scorer reuses the max_df-guarded shingle pair
     machinery; counts are exact integers with one division at emit."""
     from pyspark.sql import functions as F
 
     docs = T(spark, sf, "documents")
-    # ONE signature relation feeds all three configs (lazy
-    # localCheckpoint: without it each union branch re-derives the
-    # shingle scan + signature agg — measured 114 HashAggregates and
-    # zero ReusedExchange in the naive per-config plan); the exact
-    # scorer is shared the same way
     sig = D.minhash_signatures(docs, "doc_id", "text",
                                num_hashes=NUM_HASHES,
-                               shingle_n=SHINGLE_N) \
-        .localCheckpoint(eager=False)
+                               shingle_n=SHINGLE_N)
     jac = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=SHINGLE_N,
                                 threshold=0.0, max_df=MAX_DF) \
-        .select("id_a", "id_b", "jaccard").localCheckpoint(eager=False)
-    out = None
-    for b in _TUNE_BANDS:
-        r = NUM_HASHES // b
-        banded = (sig.groupBy("doc_id",
-                              (F.col("j") / r).cast("int").alias("band"))
-                  .agg(F.array_join(
-                      F.transform(
-                          F.array_sort(F.collect_list(
-                              F.struct("j", "minhash"))),
-                          lambda s: s["minhash"].cast("string")), ",")
-                      .alias("band_key")))
-        cand = (banded.alias("a")
-                .join(banded.alias("b"), ["band", "band_key"])
-                .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-                .select(F.col("a.doc_id").alias("id_a"),
-                        F.col("b.doc_id").alias("id_b"))
-                .distinct())
-        scored = (cand.join(jac, ["id_a", "id_b"], "left")
-                  .agg(F.count("*").cast("bigint").alias("n_candidates"),
-                       F.sum(F.when(F.coalesce("jaccard", F.lit(0.0))
-                                    >= 0.2, 1).otherwise(0))
-                       .cast("bigint").alias("n_true")))
-        row = scored.select(
-            F.lit(b).cast("bigint").alias("bands"),
-            F.lit(NUM_HASHES // b).cast("bigint").alias("rows_per_band"),
-            "n_candidates", "n_true",
-            F.round(F.col("n_true") * 1.0
-                    / F.nullif(F.col("n_candidates"), F.lit(0)), 6)
-            .alias("precision"))
-        out = row if out is None else out.unionByName(row)
-    return out
+        .select("id_a", "id_b", "jaccard")
+    # all three configs in ONE pass: each signature slot is copied
+    # in-row once per config, so one banding aggregation, one banded
+    # self-join and one left join against the exact scorer serve them
+    # all (per-config plans re-derive the scorer: their joins get
+    # different AQE strategies, so their exchanges never match)
+    cfg = F.explode(F.array(*[
+        F.struct(F.lit(b).cast("bigint").alias("bands"),
+                 F.lit(NUM_HASHES // b).alias("r"))
+        for b in _TUNE_BANDS])).alias("_c")
+    banded = (sig.select("doc_id", "j", "minhash", cfg)
+              .groupBy(F.col("_c.bands").alias("bands"), "doc_id",
+                       (F.col("j") / F.col("_c.r")).cast("int")
+                       .alias("band"))
+              .agg(F.array_join(
+                  F.transform(
+                      F.array_sort(F.collect_list(
+                          F.struct("j", "minhash"))),
+                      lambda s: s["minhash"].cast("string")), ",")
+                  .alias("band_key")))
+    cands = (banded.alias("a")
+             .join(banded.alias("b"), ["bands", "band", "band_key"])
+             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+             .select("bands", F.col("a.doc_id").alias("id_a"),
+                     F.col("b.doc_id").alias("id_b"))
+             .distinct())
+    scored = (cands.join(jac, ["id_a", "id_b"], "left")
+              .groupBy("bands")
+              .agg(F.count("*").cast("bigint").alias("n_candidates"),
+                   F.sum(F.when(F.coalesce("jaccard", F.lit(0.0))
+                                >= 0.2, 1).otherwise(0))
+                   .cast("bigint").alias("n_true")))
+    # every config reports a row, as the oracle's global aggregates do
+    # (no candidates: 0, n_true NULL); scored is <= 3 rows
+    configs = spark.createDataFrame(
+        [(b, NUM_HASHES // b) for b in _TUNE_BANDS],
+        "bands bigint, rows_per_band bigint")
+    return (configs.join(F.broadcast(scored), "bands", "left")
+            .select("bands", "rows_per_band",
+                    F.coalesce("n_candidates", F.lit(0)).cast("bigint")
+                    .alias("n_candidates"),
+                    "n_true",
+                    F.round(F.col("n_true") * 1.0
+                            / F.nullif(F.col("n_candidates"), F.lit(0)), 6)
+                    .alias("precision")))
 
 
 def _fs_em_oracle() -> str:

@@ -1792,7 +1792,10 @@ def text_rake_keyphrases(spark, sf):
           .agg(F.sum("n_occurrences").cast("bigint").alias("freq"),
                F.sum(F.col("plen") * F.col("n_occurrences"))
                .cast("bigint").alias("deg")))
-    sc = (iw.join(ws, "w")
+    # shuffle_hash pins the join strategy: left to AQE, converting ws
+    # to a broadcast depends on which of two concurrent stages finishes
+    # first, so the job count (6 or 7) changes from run to run
+    sc = (iw.join(ws.hint("shuffle_hash"), "w")
           .groupBy("phrase", "n_occurrences")
           .agg(F.round(F.sum(F.col("deg") * 1.0 / F.col("freq")), 6)
                .alias("score")))

@@ -816,19 +816,35 @@ def test_semantic_dedup_hierarchy_matches_flat(spark, sf_dir):
         assert hier[i] == expected[i], i
 
 
-def test_semantic_dedup_keeps_no_state(spark, sf_dir):
-    """dedup_semantic leaves nothing behind and shares its assignment
-    through exchange reuse: no persisted RDD survives the query, the
-    pair self-join's second side is a ReusedExchange of the cell
-    exchange (no InMemoryTableScan), and a back-to-back rerun schedules
-    exactly as many jobs as the first run (no warm cache to hit)."""
+# (query, exchanges its repeated reads must share)
+_SHARED_SUBTREES = [
+    # the two-level quantizer's cell assignment (self-join sides)
+    ("dedup_semantic", ["hashpartitioning(cell"]),
+    # the symmetric edge relation every label round joins
+    ("graph_connected_components", ["hashpartitioning(nbr"]),
+    # the APSS doc-grain relation and the duplicate-member table
+    ("dedup_allpairs_canonical", ["hashpartitioning(_rid",
+                                  "hashpartitioning(_h"]),
+]
+
+
+@pytest.mark.parametrize("name, shared", _SHARED_SUBTREES,
+                         ids=[n for n, _ in _SHARED_SUBTREES])
+def test_query_keeps_no_state(spark, sf_dir, name, shared):
+    """A query that reads one subtree several times leaves nothing
+    behind and shares the subtree through exchange reuse: no persisted
+    RDD survives the query, the final plan reads no checkpoint or
+    cache (no ``Scan ExistingRDD``, no ``InMemoryTableScan``) but a
+    ``ReusedExchange`` of each shared exchange, and a back-to-back
+    rerun schedules exactly as many jobs as the first run (no warm
+    state to hit)."""
     import fmx.queries as Q
 
     sc = spark.sparkContext
-    fn = Q.all_queries()["dedup_semantic"].fn
+    fn = Q.all_queries()[name].fn
 
     def run(group):
-        sc.setJobGroup(group, "semantic no-state")
+        sc.setJobGroup(group, "no-state")
         try:
             df = fn(spark, sf_dir)
             df.collect()
@@ -837,14 +853,16 @@ def test_semantic_dedup_keeps_no_state(spark, sf_dir):
         return df, len(sc.statusTracker().getJobIdsForGroup(group))
 
     before = sc._jsc.getPersistentRDDs().size()
-    df, jobs1 = run("semantic-no-state-1")
+    df, jobs1 = run(f"{name}-no-state-1")
     assert sc._jsc.getPersistentRDDs().size() == before
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     assert "InMemoryTableScan" not in plan
-    assert any("ReusedExchange" in ln and "hashpartitioning(cell" in ln
-               for ln in plan.splitlines()), plan
-    _, jobs2 = run("semantic-no-state-2")
+    assert "Scan ExistingRDD" not in plan
+    for key in shared:
+        assert any("ReusedExchange" in ln and key in ln
+                   for ln in plan.splitlines()), (key, plan)
+    _, jobs2 = run(f"{name}-no-state-2")
     assert jobs1 > 0 and jobs2 == jobs1
 
 

@@ -452,3 +452,34 @@ def test_holt_winters_fold_stays_jvm_side(spark, sf_dir):
     plan = _plan(spark, sf_dir, "ts_holt_winters")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Window" not in plan
+
+
+# Driver actions a headliner runs on purpose while it is built: the
+# semantic dedup's cell count tracks the corpus size, so its one count
+# action (a scan stage and a final aggregation: two jobs) runs before
+# the plan exists.  Any other build-time job is hidden execution — a
+# lazy checkpoint, under AQE, runs every upstream shuffle stage at the
+# call.
+_BUILD_JOBS = {"dedup_semantic": 2}
+
+
+def test_building_headliners_runs_no_jobs(spark, sf_dir):
+    """Building a headliner plans it and runs nothing: after a first
+    build of every headliner (which pays for parquet schema inference
+    and file listing), a second build schedules no job apart from the
+    deliberate driver actions pinned in ``_BUILD_JOBS``."""
+    sc = spark.sparkContext
+    names = sorted(n for n, s in ALL.items() if s.headline)
+    assert len(names) == 30
+    for name in names:
+        ALL[name].fn(spark, sf_dir)
+    jobs = {}
+    for name in names:
+        group = f"build-{name}"
+        sc.setJobGroup(group, "build only")
+        try:
+            ALL[name].fn(spark, sf_dir)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {n: _BUILD_JOBS.get(n, 0) for n in names}
