@@ -3,9 +3,9 @@
 Each micro-batch becomes one mini-batch SGD step (``foreachBatch`` +
 ``FMRegressorSGD._sgd_step``): the model's parameter tables are updated
 incrementally as data arrives — continuous training without a separate
-batch pipeline.  State = the param DataFrames themselves
-(localCheckpoint'd per step, so lineage stays flat across an unbounded
-stream).
+batch pipeline.  State = the param DataFrame itself: each step ends in
+an eager ``localCheckpoint``, so lineage stays flat across an unbounded
+stream and no step reads an earlier micro-batch's source again.
 """
 
 from __future__ import annotations
@@ -58,12 +58,10 @@ class OnlineFMTrainer:
                 exploded, est.getDimFactorization(),
                 float(est.getInitialSd()), est.getOrDefault(est.seed))
         self.step_count += 1
-        # eager=True: the param checkpoints must materialize before this
-        # micro-batch's cache is dropped — a lazy checkpoint would defer
-        # the work into the NEXT micro-batch, which would need to re-read
-        # this batch's source (breaks on non-replayable streams)
+        # the step's checkpoint materializes before this micro-batch's
+        # cache is dropped, so a non-replayable source is read once
         self.params, self.w0, loss = est._sgd_step(
-            self.params, self.w0, exploded, n, self.step_count, eager=True)
+            self.params, self.w0, exploded, n, self.step_count)
         self.losses.append(loss)
         prepped.unpersist()
 

@@ -27,12 +27,12 @@ Deliberate divergences (documented for the judge):
   partitioning.
 - **Lineage truncation**: the reference stacks a new plan on the old
   params every iteration with no checkpointing (SURVEY.md §3.1 hazard);
-  we ``localCheckpoint`` the param tables each iteration (lazily — the
-  checkpoint materializes inside the next iteration's first action,
-  halving driver round-trips per step).
+  each step ends in an eager ``localCheckpoint`` of the param table,
+  which is the step's one Spark action.
 - **Loss via SQL agg** not RDD ``map/reduce`` (SGD.scala:134-138): the
-  forward pass already yields one row per sample, so no ``first()``
-  dedup is needed either.
+  loss and error sums are observed on the per-sample forward relation
+  inside the checkpoint's job, so no ``first()`` dedup and no second
+  action are needed.
 - **Upsert via single full-outer join per table** instead of the chained
   double outer join (SGD.scala:156-175).
 """
@@ -49,7 +49,7 @@ from pyspark.ml.param.shared import (
     HasFitIntercept, HasMaxIter, HasRegParam, HasSeed, HasStepSize,
 )
 from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 import fmx.fm.dataflow as DF
@@ -235,8 +235,7 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         return model
 
     def _sgd_step(self, params, w0: float, batch: DataFrame, n: int,
-                  it: int, eager: bool = False,
-                  carry: list | None = None):
+                  it: int):
         """One mini-batch SGD update (the reference foldLeft body,
         SGD.scala:114-212) on a LONG-format batch ``(sampleIdCol,
         labelCol, featureId, featureValue)`` of ``n`` samples — n, the
@@ -246,13 +245,10 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         w0', loss), or loss None for an empty batch — also the unit of
         online training on streams (fmx.fm.online).
 
-        Cache lifecycle: the new param tables are lazy localCheckpoints
-        that materialize inside the NEXT step's first action, so this
-        step's rows/pred caches must outlive the step — they are handed
-        to ``carry`` and released at the start of the next step, after
-        that action.  ``eager=True`` (online/streaming path) materializes
-        the checkpoints immediately instead, so the micro-batch source
-        never needs to be re-read (non-replayable sources)."""
+        The step runs ONE action: the eager checkpoint of the new param
+        table.  The loss and the error sum (the fitIntercept w0 step)
+        are observed on the forward relation inside that job, and the
+        step's only cache is released before it returns."""
         if n == 0:
             return params, w0, None
         k = self.getDimFactorization()
@@ -265,33 +261,26 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
 
         # ONE left join attaches both params + seeded init for features
         # unseen by the table (reference calcLossGrad J2,
-        # Model.scala:154-171)
+        # Model.scala:154-171).  Cached: the forward pass and the
+        # gradient both read it, and recomputing the join for the
+        # second read doubles the step's executor CPU
         rows = DF.join_params(batch, params, how="left", k=k,
                               sd=sd, seed=seed + it).cache()
         # fused forward (guide §2.4): pred, err and the k factor sums
-        # come from ONE per-sample hash-agg, and the gradient pass
-        # joins that one relation on sample_id
+        # come from ONE per-sample hash-agg; loss and error sum ride
+        # the same job as observed metrics
+        obs = Observation()
         pred = self._error_and_loss(
             DF.forward_wide(rows, w0, k, label_col=label, sample_id=sid),
-            label).cache()
-        stats = pred.agg(F.sum("loss_term").alias("loss"),
-                         F.sum("err").alias("err_sum")).first()
-        # that action materialized the previous step's lazy checkpoints;
-        # its rows/pred caches can now be released
-        if carry:
-            for df in carry:
-                df.unpersist()
-            carry.clear()
-        # a batch whose samples all lack active features forwards no
-        # rows: both sums are empty
-        loss = float(stats.loss or 0.0)
-        if self.getOrDefault(self.fitIntercept):
-            # dŷ/dw0 = 1 -> w0 step is the error sum over n (scalar,
-            # driver-side; piggybacks on the loss action)
-            w0 = w0 - lr * (float(stats.err_sum or 0.0) / n)
-
+            label).observe(obs, F.sum("loss_term").alias("loss"),
+                           F.sum("err").alias("err_sum"))
+        # broadcast pinned: one row per batch sample (id, pred, err and
+        # the k sums) is small, and a strategy AQE picks from run-time
+        # sizes would change the gradient's float summation order from
+        # one fit to the next
         grad = DF.aggregate_gradients_merged(
-            DF.row_gradients(rows, pred, k, sample_id=sid), n, lr, k)
+            DF.row_gradients(rows, F.broadcast(pred), k, sample_id=sid),
+            n, lr, k)
 
         # upsert: params ∪ gradients in ONE outer join (the tables are
         # key-aligned, so the merged layout halves the join + checkpoint
@@ -309,18 +298,19 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
                     L.vec_sub(F.coalesce("vec", L.zeros(k)),
                               F.coalesce("dvec", L.zeros(k))),
                     shrink).alias("vec")))
-        # cut lineage (the reference's missing piece); lazy by default:
-        # the checkpoint materializes inside the NEXT iteration's first
-        # action instead of costing two extra driver round-trips
-        params = new_params.localCheckpoint(eager=eager)
-        if carry is not None and not eager:
-            # keep this step's caches alive until the lazy checkpoints
-            # materialize (next step / _finalize) — releasing them now
-            # would force a full forward+gradient recompute there
-            carry.extend([rows, pred])
-        else:
-            rows.unpersist()
-            pred.unpersist()
+        # cut lineage (the reference's missing piece): the step's one
+        # action, after which nothing reads this batch again
+        params = new_params.localCheckpoint(eager=True)
+        rows.unpersist()
+        # a batch whose samples all lack active features forwards no
+        # rows: AQE prunes the empty forward relation from the final
+        # plan, and Spark completes the observation with an empty row
+        # that Observation.get cannot convert.  Both sums are 0 then
+        stats = obs.get if obs._jo.getRow().length() else {}
+        loss = float(stats.get("loss") or 0.0)
+        if self.getOrDefault(self.fitIntercept):
+            # dŷ/dw0 = 1 -> w0 step is the error sum over n
+            w0 = w0 - lr * (float(stats.get("err_sum") or 0.0) / n)
         return params, w0, loss
 
     def _run_sgd(self, data: DataFrame, batches: list[DataFrame],
@@ -337,16 +327,12 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
         w0 = 0.0  # reference inits globalBias to 0 and never updates it
 
         params = self._initial_params(data, k, sd, seed)
-        # lazy (r14): the init table's checkpoint materializes inside
-        # step 1's loss action instead of costing a separate upfront
-        # job per fit — same rows, the RDD is computed exactly once
-        # either way
-        params = params.localCheckpoint(eager=False)
+        params = params.localCheckpoint(eager=True)
 
         # every batch's n in ONE driver action.  Counted after the
-        # checkpoint above, whose planning fills the source cache:
-        # against an unfilled cache each batch of the union would add
-        # its own cache-stage job
+        # checkpoint above, whose job fills the source cache: against
+        # an unfilled cache each batch of the union would add its own
+        # cache-stage job
         tagged = reduce(DataFrame.unionAll,
                         [b.select(F.lit(i).alias("_b"), sid)
                          for i, b in enumerate(counted)])
@@ -354,19 +340,11 @@ class FMRegressorSGD(Estimator, FMParamsBase, HasMaxIter, HasRegParam,
                   tagged.groupBy("_b").agg(n_expr.alias("n")).collect()}
 
         self.training_loss_ = []
-        carry: list = []
         for it, batch in enumerate(batches, start=1):
             params, w0, loss = self._sgd_step(
-                params, w0, batch, counts.get(it - 1, 0), it, carry=carry)
+                params, w0, batch, counts.get(it - 1, 0), it)
             if loss is not None:
                 self.training_loss_.append(loss)
-        if carry:
-            # materialize the final lazy checkpoint (ONE action, once
-            # per fit — not per iteration) before dropping the last
-            # step's caches; the caller then drops the source cache
-            params.count()
-            for df in carry:
-                df.unpersist()
         model = FMModel(
             dim_factorization=k, global_bias=w0,
             strength=params.select("featureId", "strength"),

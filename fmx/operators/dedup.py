@@ -136,7 +136,8 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     its set).  ``max_df`` drops shingles appearing in more than that
     many documents — the standard hot-key guard that keeps the
     downstream shingle self-join skew-free at corpus scale (a shingle
-    shared by 1M docs would otherwise produce 10¹² join rows).
+    shared by 1M docs would otherwise produce 10¹² join rows).  With
+    ``max_df`` set, documents with a NULL id have no shingles.
     """
     # shingle construction is single-sourced in _shingle_expr (r12
     # advice: an inline copy of the transform/sequence/slice expression
@@ -144,20 +145,28 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     # is exploded DIRECTLY — not via shingle_array's materialized
     # array column — so the Generate stays fused (4.7x, see
     # _shingle_expr)
+    if max_df is not None:
+        # the id joins downstream would push an inferred IS NOT NULL
+        # below the set branch only; filtering here keeps it and the
+        # frequency branch one subtree, tokenized by one scan stage
+        df = df.filter(F.col(id_col).isNotNull())
     toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("t"))
     sh = toks.select(id_col, F.explode(_shingle_expr(n)).alias("shingle"))
     if distinct:
         sh = sh.distinct()
     if max_df is not None:
-        # document frequency via groupBy + broadcast-friendly semi-join,
-        # NOT count(*) OVER (PARTITION BY shingle): the window would
+        # document frequency via groupBy + broadcast-friendly join, NOT
+        # count(*) OVER (PARTITION BY shingle): the window would
         # materialize every hot-shingle partition in one task — exactly
-        # the skew this guard exists to prevent
+        # the skew this guard exists to prevent.  An inner join (keep's
+        # shingles are unique, so the rows are a semi-join's): a
+        # left-semi join is pushed below the set branch's distinct,
+        # and the frequency branch's exchange would no longer match it
         keep = (sh.groupBy("shingle")
                 .agg(F.count("*").alias("_df"))
                 .filter(F.col("_df") <= max_df)
                 .select("shingle"))
-        sh = sh.join(keep, "shingle", "left_semi")
+        sh = sh.join(keep, "shingle").select(id_col, "shingle")
     return sh
 
 

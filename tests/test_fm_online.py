@@ -37,6 +37,33 @@ def test_online_empty_micro_batch_is_a_no_op(spark):
     assert trainer.w0 == 0.0
 
 
+def test_batch_without_active_features_is_a_zero_loss_step(spark):
+    """A batch whose samples all lack active features forwards no rows:
+    it is still a step (L1 shrinkage applies), with loss 0 and no w0
+    move — online after a first micro-batch, and in a vector fit whose
+    every sample is empty."""
+    from pyspark.ml.linalg import Vectors
+
+    full = spark.createDataFrame([(Vectors.dense([1.0, 0.5]), 1.0)] * 3,
+                                 ["features", "label"])
+    empty = spark.createDataFrame([(Vectors.sparse(2, []), 2.0)] * 2,
+                                  ["features", "label"])
+    trainer = OnlineFMTrainer(estimator=FMRegressorSGD(
+        dimFactorization=2, seed=3, fitIntercept=True))
+    trainer.process_batch(full, 0)
+    w0 = trainer.w0
+    trainer.process_batch(empty, 1)
+    assert trainer.step_count == 2
+    assert trainer.losses[1] == 0.0 and trainer.w0 == w0
+    assert trainer.params.count() == 2
+
+    est = FMRegressorSGD(dimFactorization=2, maxIter=1,
+                         miniBatchFraction=1.0, seed=3, fitIntercept=True)
+    model = est.fit(empty)
+    assert est.training_loss_ == [0.0]
+    assert model.global_bias == 0.0 and model.strength.count() == 0
+
+
 def test_online_training_through_real_stream(spark, sf_dir):
     """The trainer attached to an actual file stream learns a constant
     target through the streaming machinery."""

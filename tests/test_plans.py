@@ -172,6 +172,35 @@ def test_pq_encode_single_shuffle(spark, sf_dir):
     assert "Checkpoint" not in plan and "ExistingRDD" not in plan
 
 
+def test_ngram_jaccard_scans_corpus_once(spark, sf_dir):
+    """The max_df guard's document-frequency branch and the shingle set
+    it filters are one subtree: one stage reads and tokenizes the
+    corpus, and exchange reuse serves every other read of it."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    group = "ngram-jaccard-scans"
+    sc.setJobGroup(group, "scan stages")
+    try:
+        (ALL["dedup_ngram_jaccard"].fn(spark, sf_dir)
+         .write.mode("overwrite").format("noop").save())
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = sc._jsc.sc().statusStore()
+    scans = 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        stage_ids = store.job(job).stageIds()
+        for i in range(stage_ids.size()):
+            try:
+                st = store.lastStageAttempt(stage_ids.apply(i))
+            except Py4JJavaError:
+                continue    # a stage whose output was reused never ran
+            if str(st.status()) != "SKIPPED" and st.inputBytes() > 0:
+                scans += 1
+    assert scans == 1, scans
+
+
 def test_span_profile_no_span_self_join(spark, sf_dir):
     """The span-duplication profile is two hash-aggs + one equi-join —
     a span self-join (quadratic in duplicated docs) must never appear:

@@ -5,9 +5,10 @@ protocol from SCALE.md's r12 noise addendum (interleaving controls
 host drift; the comparator anchors the ratio).
 
 Usage: python tools/abbench.py [--passes N] [--sf DIR] query [query ...]
-Prints per-query wall list, min/median, DuckDB best-of-2 and the
-floor-adjusted view using the same empty-plan dispatch floor as
-bench.py.
+Prints per-query wall list, min/median, jobs and executor CPU per
+pass (read through perfbench/sparkstats.py's ``group_stats``), DuckDB
+best-of-2 and the floor-adjusted view using the same empty-plan
+dispatch floor as bench.py.
 """
 
 from __future__ import annotations
@@ -17,7 +18,9 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 
 def main() -> None:
@@ -35,6 +38,8 @@ def main() -> None:
             names.append(args[i]); i += 1
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from sparkstats import group_stats
+
     import fmx
     import fmx.queries as Q
 
@@ -55,7 +60,6 @@ def main() -> None:
     floor = min(floor_runs)
 
     walls: dict[str, list[float]] = {n: [] for n in names}
-    jobs: dict[str, int] = {}
     for p in range(passes):
         for n in names:
             sc.setJobGroup(f"{n}#{p}", n)
@@ -64,11 +68,11 @@ def main() -> None:
                 .format("noop").save()
             walls[n].append(time.perf_counter() - t0)
         sc.setJobGroup("idle", "")
-    tracker = sc.statusTracker()
-    for n in names:
-        per = [len(tracker.getJobIdsForGroup(f"{n}#{p}"))
-               for p in range(passes)]
-        jobs[n] = min(per) if per else 0
+    stats = {n: [group_stats(sc, f"{n}#{p}") for p in range(passes)]
+             for n in names}
+    jobs = {n: min(s.jobs for s in stats[n]) for n in names}
+    cpu = {n: statistics.median(s.executor_cpu_s for s in stats[n])
+           for n in names}
 
     duck: dict[str, float] = {}
     try:
@@ -95,11 +99,11 @@ def main() -> None:
     print(f"\nfloor={floor:.3f}s  sf={sf_dir}  passes={passes}")
     for n in names:
         w = walls[n]
-        adj = max(min(w) - floor * jobs.get(n, 1), 0.0)
+        adj = max(min(w) - floor * jobs[n], 0.0)
         d = duck.get(n)
         ratio = f"{adj / d:6.2f}" if d else "   n/a"
         print(f"{n:38s} min={min(w):6.3f} med={statistics.median(w):6.3f} "
-              f"jobs={jobs.get(n, 0):3d} adj={adj:6.3f} "
+              f"jobs={jobs[n]:3d} cpu={cpu[n]:6.3f} adj={adj:6.3f} "
               f"duck={d if d else float('nan'):6.3f} adj_ratio={ratio} "
               f"runs={[round(x, 2) for x in w]}")
     spark.stop()
