@@ -122,14 +122,12 @@ class FMModel(Model, FMParamsBase, MLWritable, MLReadable):
     @keyword_only
     def __init__(self, dim_factorization: int = 10, global_bias: float = 0.0,
                  strength: DataFrame | None = None,
-                 factors: DataFrame | None = None,
-                 hint_broadcast_params: bool = False):
+                 factors: DataFrame | None = None):
         super().__init__()
         self.dim_factorization = int(dim_factorization)
         self.global_bias = float(global_bias)
         self.strength = strength
         self.factors = factors
-        self.hint_broadcast_params = hint_broadcast_params
         self._setDefault(featuresCol="features", predictionCol="prediction",
                          labelCol="label", sampleIdCol="sampleId")
 
@@ -150,27 +148,18 @@ class FMModel(Model, FMParamsBase, MLWritable, MLReadable):
         return self._set(maxLabel=float(v))
 
     def copy(self, extra=None):
-        new = FMModel(
+        new = type(self)(
             dim_factorization=self.dim_factorization,
             global_bias=self.global_bias,
             strength=self.strength,
             factors=self.factors,
-            hint_broadcast_params=self.hint_broadcast_params,
         )
+        new._restore_extra_metadata(self._extra_metadata())
         new = self._copyValues(new, extra)
         new._resetUid(self.uid)
         return new
 
     # -- dataflow ------------------------------------------------------
-
-    def _param_tables(self):
-        s, v = self.strength, self.factors
-        if self.hint_broadcast_params:
-            # param tables are usually |features| x (1+k) doubles — tiny
-            # next to the exploded fact side; broadcast kills two shuffles
-            # (J1/J2 hot path, SURVEY.md §2.3). Left to AQE when unset.
-            s, v = F.broadcast(s), F.broadcast(v)
-        return s, v
 
     def predict_exploded(self, exploded: DataFrame,
                          sample_id: str = "sampleId") -> DataFrame:
@@ -180,8 +169,8 @@ class FMModel(Model, FMParamsBase, MLWritable, MLReadable):
         inner-join params (``DF.join_params``) → ``DF.forward_wide``'s
         ONE per-sample hash-agg → clamp.  The factor-sum array ``s`` it
         also yields is pruned from this projection by Catalyst."""
-        strength, factors = self._param_tables()
-        rows = DF.join_params(exploded, strength, factors, how="inner")
+        rows = DF.join_params(exploded, self.strength, self.factors,
+                              how="inner")
         fwd = DF.forward_wide(rows, self.global_bias, self.dim_factorization,
                               sample_id=sample_id)
         return self._clamp(fwd.select(

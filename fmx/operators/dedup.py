@@ -597,27 +597,6 @@ def incremental_dedup(new_docs: DataFrame, seen_hashes: DataFrame,
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def _argmax_cell(df: DataFrame, id_col: str, sim_col: str, cell_col: str,
-                 carry: list[str]) -> DataFrame:
-    """Deterministic per-id argmax over candidate cells as ONE hash
-    aggregation: max over struct(sim, -cell, carry...) picks the highest
-    similarity, ties broken toward the LOWEST cell id.  The (sim, -cell)
-    prefix is unique per group (cell ids are distinct), so the carried
-    fields never participate in the comparison.
-
-    This shape matters at scale: the candidate expansion (n x l1 rows)
-    collapses back to n rows MAP-SIDE via partial aggregation before the
-    shuffle — a ranking-window formulation would shuffle the full
-    expanded relation instead."""
-    m = F.max(F.struct(
-        F.col(sim_col).alias("s"),
-        (-F.col(cell_col)).alias("nc"),
-        *[F.col(c).alias(c) for c in carry])).alias("_m")
-    return (df.groupBy(id_col).agg(m)
-            .select(F.col(id_col), (-F.col("_m.nc")).alias(cell_col),
-                    *[F.col(f"_m.{c}").alias(c) for c in carry]))
-
-
 def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                    num_cells: int = 8, cells_per_n: int | None = 250,
                    threshold: float = 0.9,
@@ -637,15 +616,21 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     Assignment is HIERARCHICAL (two-level coarse quantization, the
     IVF-within-IVF standard): ``l1_cells`` level-1 centroids (default
     floor(sqrt(num_cells)); the first l1 centroids double as their own
-    level-1 cells) are a genuinely small broadcast table; the full
-    level-2 centroid relation stays EXECUTOR-SIDE, reached through an
-    equi-join on the level-1 cell key.  Per vector the scan cost is
+    level-1 cells) ride ONE broadcast row; each level-2 centroid is
+    routed to its nearest level-1 cell, and the level-2 centroids are
+    grouped into one row per level-1 cell, reached through an
+    equi-join on the level-1 cell key.  AQE broadcasts that grouped
+    relation only while it is small; at scale it stays a shuffled,
+    executor-side join input.  Per vector the scan cost is
     l1 + num_cells/l1 ~ 2*sqrt(C) dot products instead of the flat C,
-    and — critically — no centroid ever passes through the driver: at
-    1B vectors the flat path would collect n/250 = 4M centroids to the
-    driver and rescan all of them per row; here the only driver action
-    is the corpus count.  ``l1_cells=1`` degenerates to the exact flat
-    assignment (one level-1 group holding every centroid).
+    and no centroid ever passes through the driver: at 1B vectors the
+    flat path would collect n/250 = 4M centroids to the driver and
+    rescan all of them per row.  ``l1_cells=1`` degenerates to the
+    exact flat assignment (one level-1 group holding every centroid).
+    Both levels take their argmax in-row through the shared coarse
+    quantizer (``fmx.operators.similarity._nearest_cells``: highest
+    cosine wins, ties to the lowest cell), so the assignment needs no
+    per-vector aggregate and no shuffle of the candidate expansion.
 
     Zero-norm embeddings have no direction, hence no defined cosine:
     they are routed to sentinel cell -1 with NULL nn_lower_sim and
@@ -655,53 +640,55 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     each pair one JVM zip_with fold over unit vectors.  ``cells_per_n``
     grows the cell count with the corpus (num_cells = max(num_cells,
     n // cells_per_n)) so mean cell size stays ~cells_per_n and pair
-    volume stays LINEAR in n (sum n_c^2 ~ n * cells_per_n).  The corpus
-    is never globally all-paired, and argmax assignment at both levels
-    is a map-side-combinable hash agg (see _argmax_cell).
+    volume stays LINEAR in n (sum n_c^2 ~ n * cells_per_n).  The cell
+    counts are a 1-row relation derived from count(*) inside the
+    query, as the oracle derives them, and reach the centroid filters
+    through a broadcast join: building the plan runs no job.  The
+    corpus is never globally all-paired.
     """
-    import math
+    from fmx.operators.similarity import _cell_array, _nearest_cells
 
     vecs = df.select(F.col(id_col),
                      F.col(vec_col).cast("array<double>").alias("_v"))
+    n2 = F.lit(num_cells)
     if cells_per_n is not None:
-        # one count action: num_cells tracks corpus size (the oracle
-        # derives the same number from count(*))
-        num_cells = max(num_cells, vecs.count() // cells_per_n)
-    l1 = l1_cells if l1_cells is not None \
-        else max(1, math.floor(math.sqrt(num_cells)))
-    # unit-normalize ONCE: every downstream similarity is then a single
-    # dot fold; x * (1.0/nrm) — not x/nrm — so the oracle can replay the
-    # identical two-rounding arithmetic.  Zero-norm -> NULL unit.
-    nrm = L.vec_norm("_v")
-    unit = vecs.select(
-        F.col(id_col),
-        F.when(nrm > 0, L.vec_scale("_v", F.lit(1.0) / nrm)).alias("_u"))
-    live = unit.filter(F.col("_u").isNotNull())
-    l1c = F.broadcast(
-        live.filter(F.col(id_col) < l1)
-        .select(F.col(id_col).cast("int").alias("_l1"),
-                F.col("_u").alias("_c1")))
-    l2c = (live.filter(F.col(id_col) < num_cells)
-           .select(F.col(id_col).cast("int").alias("_cell"),
-                   F.col("_u").alias("_c2")))
-    # route each level-2 centroid to its nearest level-1 cell (tiny x
-    # tiny cross; centroid j < l1 maps to itself at cosine 1, so every
-    # level-1 group is non-empty).  Stays a distributed relation.
-    l2map = _argmax_cell(
-        l2c.crossJoin(l1c).withColumn("_s", L.vec_dot("_c2", "_c1")),
-        "_cell", "_s", "_l1", carry=["_c2"])
-    # level 1: n x l1 broadcast scan, collapsed map-side to n rows
-    v1 = _argmax_cell(
-        live.crossJoin(l1c).withColumn("_s", L.vec_dot("_u", "_c1")),
-        id_col, "_s", "_l1", carry=["_u"])
-    # level 2: equi-join on the level-1 key reaches only that group's
-    # centroids — the num_cells x dim relation never broadcasts and
-    # never visits the driver
-    assigned = (_argmax_cell(
-        v1.join(l2map, "_l1")
-        .withColumn("_s", L.vec_dot("_u", "_c2")),
-        id_col, "_s", "_cell", carry=["_u"])
-        .withColumnRenamed("_cell", "cell"))
+        n2 = F.greatest(n2, F.floor(F.count("*") / cells_per_n))
+    n1 = (F.lit(l1_cells) if l1_cells is not None
+          else F.greatest(F.lit(1), F.floor(F.sqrt(n2))))
+    sizes = F.broadcast(vecs.agg(n2.alias("_n2"), n1.alias("_n1")))
+
+    def unit(v: DataFrame) -> DataFrame:
+        """(id, _u): unit-normalize ONCE, so every downstream similarity
+        is a single dot fold; x * (1.0/nrm) — not x/nrm — so the oracle
+        can replay the identical two-rounding arithmetic.  Zero-norm ->
+        NULL unit."""
+        nrm = L.vec_norm("_v")
+        return v.select(
+            F.col(id_col),
+            F.when(nrm > 0, L.vec_scale("_v", F.lit(1.0) / nrm)).alias("_u"))
+
+    units = unit(vecs)
+    live = units.filter(F.col("_u").isNotNull())
+
+    def cents(n: str, payload: str) -> DataFrame:
+        """The live vectors with id < the cell count ``n``; the id
+        filter runs before the normalization."""
+        return (unit(vecs.join(sizes, F.col(id_col) < F.col(n)))
+                .filter(F.col("_u").isNotNull())
+                .select(F.col(id_col).cast("int").alias("_cell"),
+                        F.col("_u").alias(payload)))
+
+    l1w = F.broadcast(_cell_array(cents("_n1", "_c1")))
+    # route each level-2 centroid to its nearest level-1 cell (centroid
+    # j < l1 maps to itself at cosine 1, so every level-1 group is
+    # non-empty)
+    l2map = _nearest_cells(cents("_n2", "_c2").crossJoin(l1w),
+                           lambda c: L.vec_dot("_c2", c["_c1"]), "_l1")
+    v1 = _nearest_cells(live.crossJoin(l1w),
+                        lambda c: L.vec_dot("_u", c["_c1"]), "_l1")
+    # level 2: each vector meets only its level-1 group's centroids
+    assigned = _nearest_cells(v1.join(_cell_array(l2map, "_l1"), "_l1"),
+                              lambda c: L.vec_dot("_u", c["_c2"]), "cell")
     # The assignment feeds both join sides.  The left join infers
     # IsNotNull(cell, _id) on its build side only, which alone would keep
     # the two subtrees from canonicalizing equal; filtering the shared
@@ -730,7 +717,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                      "nn_lower_sim",
                      F.coalesce(F.col("nn_lower_sim") >= threshold,
                                 F.lit(False)).alias("is_dup")))
-    zeros = (unit.filter(F.col("_u").isNull())
+    zeros = (units.filter(F.col("_u").isNull())
              .select(F.col(id_col).cast("bigint").alias(id_col),
                      F.lit(-1).cast("bigint").alias("cell"),
                      F.lit(None).cast("double").alias("nn_lower_sim"),

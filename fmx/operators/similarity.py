@@ -28,6 +28,12 @@ Shared cores, so each piece of math has one definition:
 - ``_top_k`` is every per-query ranking tail (row_number over the
   score, ties to the lower id) and ``_cosine_rerank`` the exact
   rerank of a shortlist.
+- ``_nearest_cells`` is the one coarse quantizer: centroids ride one
+  broadcast (or joined) ``_cw`` row, which ``_cell_array`` builds from
+  a centroid relation, and every nearest-cell assignment — IVF,
+  IVF-PQ, SemDeDup's two levels and the cell histogram — ranks the
+  cells in-row (highest score first, ties to the lowest cell).  The
+  score stays with the caller.
 
 At 100 TB the corpus side never broadcasts; the query side does.  All
 plans keep the corpus scan pruned to (id, vector).
@@ -98,6 +104,34 @@ def _top_k(scored: DataFrame, query_id: str, order: F.Column,
     w = Window.partitionBy(query_id).orderBy(order, F.col(id_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+def _cell_array(cents: DataFrame, *keys: str) -> DataFrame:
+    """Coarse centroids as ``_cw``: a cell-sorted
+    ``array<struct<_cell int, ...payload>>``, one row (or one per
+    ``keys`` group).  ``cents`` holds ``_cell`` first, then the payload
+    the caller's score reads; the caller broadcasts or joins it."""
+    fields = [c for c in cents.columns if c not in keys]
+    return cents.groupBy(*keys).agg(
+        F.sort_array(F.collect_list(F.struct(*fields))).alias("_cw"))
+
+
+def _nearest_cells(df: DataFrame, score, out: str, n: int = 1) -> DataFrame:
+    """The one nearest-cell rule: every ``_cw`` element of a row maps to
+    struct(score(element), -cell), so the highest score wins and ties
+    go to the lowest cell.  Each row becomes one row per its top ``n``
+    cells (score descending, then cell ascending), the cell in ``out``
+    and ``_cw`` dropped; a row with no cells drops out.  The ranking is
+    in-row: no per-vector aggregate, window or shuffle.  It ends in a
+    generator so that the IsNotNull a later join on ``out`` infers is
+    evaluated on the generated cell: pushed through a projection it
+    would evaluate every score a second time."""
+    sims = F.transform("_cw", lambda c: F.struct(
+        score(c).alias("s"), (-c["_cell"]).alias("nc")))
+    keep = [c for c in df.columns if c != "_cw"]
+    top = F.slice(F.reverse(F.array_sort(sims)), 1, n)
+    return (df.select(*keep, F.explode(top).alias("_nc"))
+            .select(*keep, (-F.col("_nc.nc")).alias(out)))
 
 
 def _cosine_rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame,
@@ -276,7 +310,12 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     share the *identical* literal table, so cell ids cannot diverge
     between independently-evaluated branches (the previous
     monotonically_increasing_id derivation was partition-layout-
-    dependent).  Probing stays an equi-join on cell; corpus rows belong
+    dependent).  The table reaches the executors as ONE broadcast row of
+    cell structs, built on the driver, and both assignments are in-row
+    (``_nearest_cells``): a vector meets every centroid map-side, the
+    corpus keeps its argmax cell and each query its top ``nprobe``
+    cells, with no per-vector aggregate, ranking window or shuffle.
+    Probing stays an equi-join on cell; corpus rows belong
     to exactly one cell, so (query, candidate) pairs are unique and the
     corpus is never cross-joined.
     """
@@ -289,37 +328,19 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     cents_local = [(i, [float(x) for x in r[vec_col]])
                    for i, r in enumerate(seed_rows)]
 
-    def cents_df(local):
+    def cells(local):
+        """The driver-side table as the one broadcast ``_cw`` row."""
         return F.broadcast(spark.createDataFrame(
-            local, "_cell int, _centroid array<double>"))
+            [(sorted(local),)],
+            "_cw array<struct<_cell int, _centroid array<double>>>"))
 
-    def assign(df: DataFrame, cents, out: str, n: int = 1) -> DataFrame:
-        sims = (df.crossJoin(cents)
-                .withColumn("_sim",
-                            L.cosine_similarity(vec_col, "_centroid")))
-        if n == 1:
-            # corpus path: argmax as ONE hash agg (max over struct,
-            # ties to the lowest cell — identical ordering to the
-            # window/oracle) so the num_cells-wide expansion collapses
-            # back to one row per vector MAP-SIDE before any shuffle;
-            # the window formulation shuffled the full expanded relation
-            carry = [c for c in df.columns if c != id_col]
-            m = F.max(F.struct(
-                F.col("_sim").alias("s"), (-F.col("_cell")).alias("nc"),
-                *[F.col(c).alias(c) for c in carry])).alias("_m")
-            return (sims.groupBy(id_col).agg(m)
-                    .select(F.col(id_col),
-                            *[F.col(f"_m.{c}").alias(c) for c in carry],
-                            (-F.col("_m.nc")).cast("int").alias(out)))
-        # query path (top-nprobe cells): tiny side, ranking window fine
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("_sim").desc(), F.col("_cell"))
-        return (sims.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= n)
-                .select(df["*"], F.col("_cell").alias(out)))
+    def assign(df: DataFrame, cw, n: int = 1) -> DataFrame:
+        return _nearest_cells(
+            df.crossJoin(cw),
+            lambda c: L.cosine_similarity(vec_col, c["_centroid"]), "cell", n)
 
     for _ in range(max(0, lloyd_iters)):
-        assigned = assign(corpus, cents_df(cents_local), "cell", 1)
+        assigned = assign(corpus, cells(cents_local))
         # elementwise mean per cell in long format (one hash-agg), then
         # the num_cells × dim result comes back to the driver
         means = (assigned
@@ -335,9 +356,9 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
             cents_local = [(int(r["cell"]), [float(x) for x in r["v"]])
                            for r in means]
 
-    cents = cents_df(cents_local)
-    c = assign(corpus, cents, "cell", 1)
-    q = (assign(queries, cents, "cell", max(1, nprobe))
+    cw = cells(cents_local)
+    c = assign(corpus, cw)
+    q = (assign(queries, cw, max(1, nprobe))
          .select(F.col(id_col).alias(query_id), F.col(vec_col).alias("_qv"),
                  "cell"))
     sim = (c.join(F.broadcast(q), "cell")
@@ -715,9 +736,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
 
     - **cell assignment is IN-ROW, zero shuffles**: the num_cells
       centroids pivot into ONE broadcast row of (cell, vec, norm)
-      structs; per-vector cosines are an in-row transform and the
-      corpus argmax / query top-nprobe are array_max /
-      reverse(array_sort) over those structs — no per-vector
+      structs (``_cell_array``); the corpus argmax and the query
+      top-nprobe are ``_nearest_cells`` over them — no per-vector
       hash-agg, no per-query ranking window;
     - **residual + encode is one codegen pass**: posexplode AFTER the
       in-row assignment (no corpus-grain assignment join), one
@@ -734,37 +754,29 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     which the oracle SQL replays byte-exactly."""
     dsub = _pq_dsub(corpus, vec_col, m, dim)
 
-    # ONE-row pivoted coarse-centroid relation: num_cells
-    # (cell, vec, norm) structs sorted by cell, broadcast everywhere
-    carr = (_as_double(corpus, vec_col)
-            .filter(F.col(id_col) < num_cells)
-            .select(F.col(id_col).cast("int").alias("_cell"),
-                    F.col(vec_col).alias("_cv"),
-                    L.vec_norm(vec_col).alias("_cn")))
-    cw = carr.agg(F.sort_array(F.collect_list(
-        F.struct("_cell", "_cv", "_cn"))).alias("_cw"))
+    # ONE-row coarse-centroid relation: num_cells (cell, vec, norm)
+    # structs, broadcast to both assignments
+    cw = F.broadcast(_cell_array(
+        _as_double(corpus, vec_col)
+        .filter(F.col(id_col) < num_cells)
+        .select(F.col(id_col).cast("int").alias("_cell"),
+                F.col(vec_col).alias("_cv"),
+                L.vec_norm(vec_col).alias("_cn"))))
 
-    def with_sims(vdf: DataFrame, out_id: str) -> DataFrame:
-        """(out_id, _vv, _sims) where _sims[i] = (cosine vs centroid
-        i rounded to 9dp, -cell): max over the structs is the argmax
-        with ties to the lower cell."""
+    def assign(vdf: DataFrame, out_id: str, n: int = 1) -> DataFrame:
+        """(out_id, _vv, _vn, _cell): the nearest ``n`` cells by
+        cosine rounded to 9dp."""
         v = (_as_double(vdf, vec_col)
              .select(F.col(id_col).alias(out_id),
                      F.col(vec_col).alias("_vv"),
                      L.vec_norm(vec_col).alias("_vn")))
-        sims = F.transform(
-            F.col("_cw"),
-            lambda c: F.struct(
-                F.round(L.vec_dot("_vv", c["_cv"])
-                        / (F.col("_vn") * c["_cn"]), 9).alias("_sim"),
-                (-c["_cell"]).alias("nc")))
-        return (v.crossJoin(F.broadcast(cw))
-                .select(out_id, "_vv", sims.alias("_sims")))
+        return _nearest_cells(
+            v.crossJoin(cw),
+            lambda c: F.round(L.vec_dot("_vv", c["_cv"])
+                              / (F.col("_vn") * c["_cn"]), 9),
+            "_cell", n)
 
-    asg = (with_sims(corpus, id_col)
-           .select(F.col(id_col), "_vv",
-                   (-F.array_max("_sims")["nc"]).cast("int")
-                   .alias("_cell")))
+    asg = assign(corpus, id_col)
 
     # long-format centroid components for the residual join (a codegen
     # broadcast hash join beats an in-row interpreted lookup at
@@ -794,15 +806,9 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
         _pq_sums(residual_pos(asg, id_col), [id_col, "_cell"], cbw, m,
                  num_codes, dsub), [id_col, "_cell"], m, num_codes)
 
-    # query probing: in-row top-nprobe (reverse(array_sort) over the
-    # (sim, -cell) structs = sim desc, cell asc), then the same
-    # residual + distance pass as the corpus
-    qa = (with_sims(queries, query_id)
-          .select(query_id, "_vv",
-                  F.explode(F.slice(F.reverse(F.array_sort("_sims")),
-                                    1, max(1, nprobe))).alias("_ps"))
-          .select(query_id, "_vv",
-                  (-F.col("_ps.nc")).cast("int").alias("_cell")))
+    # query probing: the top-nprobe cells, then the same residual +
+    # distance pass as the corpus
+    qa = assign(queries, query_id, max(1, nprobe))
     qsums = _pq_sums(residual_pos(qa, query_id), [query_id, "_cell"], cbw,
                      m, num_codes, dsub)
     return _pq_adc(codes, qsums, id_col, query_id, ["_cell"], m,

@@ -78,8 +78,7 @@ def fm_predict(spark, sf):
 
     strength, factors = _formula_params(spark)
     model = FMModel(dim_factorization=K, global_bias=W0,
-                    strength=strength, factors=factors,
-                    hint_broadcast_params=True)
+                    strength=strength, factors=factors)
     emb = T(spark, sf, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
         F.col("embedding").cast("array<double>").alias("features"))

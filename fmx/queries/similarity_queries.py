@@ -659,26 +659,16 @@ def ann_ivf_cell_histogram(spark, sf):
     path), then one tiny per-cell agg — the capacity-planning readout
     before sizing nprobe/cell counts."""
     from fmx.core import linalg as L
-    from pyspark.sql import Window
 
     emb = T(spark, sf, "embeddings")
-    cents = F.broadcast(
+    cw = F.broadcast(S._cell_array(
         emb.filter(F.col("vec_id") < N_CELLS)
-        .select(F.col("vec_id").alias("_cell"),
-                F.col("embedding").cast("array<double>").alias("_cv")))
-    sim = (emb.select("vec_id",
-                      F.col("embedding").cast("array<double>").alias("_v"))
-           .crossJoin(cents)
-           .select("vec_id", "_cell",
-                   L.cosine_similarity("_v", "_cv").alias("_s")))
-    # argmax cell per vector: lexicographic max over (sim, -cell) —
-    # map-side-combinable, ties toward the LOWEST cell id (same
-    # convention as the oracle's ORDER BY sim DESC, cell)
-    assigned = (sim.groupBy("vec_id")
-                .agg(F.max(F.struct(F.col("_s"),
-                                    (-F.col("_cell")).alias("_nc")))
-                     .alias("_m"))
-                .select((-F.col("_m._nc")).alias("cell")))
+        .select(F.col("vec_id").cast("int").alias("_cell"),
+                F.col("embedding").cast("array<double>").alias("_cv"))))
+    assigned = S._nearest_cells(
+        emb.select(F.col("embedding").cast("array<double>").alias("_v"))
+        .crossJoin(cw),
+        lambda c: L.cosine_similarity("_v", c["_cv"]), "cell")
     hist = assigned.groupBy("cell").agg(F.count("*").alias("n"))
     wall = Window.partitionBy()
     return hist.select(

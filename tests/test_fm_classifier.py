@@ -49,3 +49,39 @@ def test_classifier_threshold(spark):
     # near-impossible threshold -> (almost) everything predicted 0
     pos = out.filter("prediction = 1.0").count()
     assert pos <= out.count() * 0.1
+
+
+def _fixed_classifier(spark, threshold):
+    strength = spark.createDataFrame(
+        [(0, 0.4), (1, -0.3), (2, 0.2)], "featureId bigint, strength double")
+    factors = spark.createDataFrame(
+        [(0, [0.5, -0.2]), (1, [0.1, 0.3]), (2, [-0.4, 0.2])],
+        "featureId bigint, vec array<double>")
+    return FMClassifierModel(threshold=threshold, dim_factorization=2,
+                             global_bias=-0.1, strength=strength,
+                             factors=factors)
+
+
+def test_classifier_copy_keeps_subclass(spark):
+    """``transform(df, params)`` scores through ``copy()``: the copy must
+    stay a classifier with the same threshold, so a param override
+    gives the columns and values of a plain transform."""
+    df = spark.createDataFrame(
+        [(i, Vectors.dense([0.3 * i, 1.0 - 0.2 * i, 0.5]))
+         for i in range(6)], ["rowId", "features"])
+    model = _fixed_classifier(spark, threshold=0.55)
+    copied = model.copy()
+    assert type(copied) is FMClassifierModel
+    assert copied.threshold == 0.55 and copied.uid == model.uid
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.drop("features").collect())
+
+    over = model.transform(df, {model.predictionCol: "p"})
+    plain = _fixed_classifier(spark, 0.55).setPredictionCol("p").transform(df)
+    assert over.columns == plain.columns
+    assert over.columns == ["rowId", "features", "rawScore", "probability",
+                            "p"]
+    assert rows(over) == rows(plain)
+    # the threshold decides the labels (0.55 splits these rows)
+    assert {r.p for r in over.collect()} == {0.0, 1.0}

@@ -59,14 +59,6 @@ def test_transform_clamped(spark, golden_input):
     assert got[103] == pytest.approx(5.0)
 
 
-def test_transform_broadcast_hint_same_result(spark, golden_input):
-    model = build_golden_model(spark, hint_broadcast_params=True)
-    got = {r.rowId: r.prediction
-           for r in model.transform(golden_input).collect()}
-    for row_id, expected in GOLDEN.items():
-        assert got[row_id] == pytest.approx(expected, abs=1e-8)
-
-
 def test_transform_array_features(spark):
     """Engine-native array<double> features (dense semantics)."""
     model = build_golden_model(spark)

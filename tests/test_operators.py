@@ -164,6 +164,30 @@ def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.8, f"IVF recall@5 {recall:.2f} < 0.8"
 
 
+def test_nearest_cells_ties_go_to_lowest_cell(spark):
+    """The one coarse-quantizer rule on hand-made ties: the highest
+    score wins, equal scores go to the lowest cell, and ``n > 1`` takes
+    cells by score descending, then cell ascending (checked through
+    the cell set of every prefix length)."""
+    cents = spark.createDataFrame(
+        [(3, 0.5), (1, 0.9), (0, 0.5), (2, 0.9), (4, 0.1)],
+        "_cell int, w double")
+    rows = (spark.createDataFrame([(7, 1.0), (8, -1.0)], "id bigint, x double")
+            .crossJoin(F.broadcast(S._cell_array(cents))))
+
+    def score(c):
+        return F.col("x") * c["w"]
+
+    order = {7: [1, 2, 0, 3, 4], 8: [4, 0, 3, 1, 2]}
+    top1 = S._nearest_cells(rows, score, "cell").collect()
+    assert {r.id: r.cell for r in top1} == {i: o[0] for i, o in order.items()}
+    for n in range(2, 6):
+        got = {}
+        for r in S._nearest_cells(rows, score, "cell", n).collect():
+            got.setdefault(r.id, set()).add(r.cell)
+        assert got == {i: set(o[:n]) for i, o in order.items()}, n
+
+
 def test_pq_trained_codebook_reduces_quantization_error(spark, sf_dir):
     """Lloyd refinement must measurably cut the k-means objective (mean
     squared quantization error) vs the fixed seed codebook — the
@@ -852,6 +876,7 @@ def test_query_keeps_no_state(spark, sf_dir, name, shared):
             sc._jsc.clearJobGroup()
         return df, len(sc.statusTracker().getJobIdsForGroup(group))
 
+    fn(spark, sf_dir)   # a first build pays the first-read jobs
     before = sc._jsc.getPersistentRDDs().size()
     df, jobs1 = run(f"{name}-no-state-1")
     assert sc._jsc.getPersistentRDDs().size() == before

@@ -92,7 +92,13 @@ def test_fused_shapes_pinned(spark, sf_dir):
       one edge-grain join round, so the exchange count stays flat.
     - dedup_allpairs_canonical (r14): min-struct reps + window member
       table — the fan-back must not regrow the sort-merge stack
-      (Sort nodes stay at the single within-group self-join)."""
+      (Sort nodes stay at the single within-group self-join).
+    - ann_ivf_topk_fixed, dedup_semantic: the in-row coarse quantizer
+      (``_nearest_cells``) — no per-vector argmax aggregate, so the IVF
+      plan keeps only the final top-k shuffle and SemDeDup's level-2
+      assignment joins no sort-merge.  Its cell scores are evaluated
+      once: the IsNotNull a join on the cell infers must not reach a
+      join condition, where it would score every centroid again."""
     ALL = Q.all_queries()
 
     def q(name):
@@ -108,6 +114,13 @@ def test_fused_shapes_pinned(spark, sf_dir):
     df = q("ann_ivfpq_topk")
     assert _node_count(df, "Window ") <= 1
     assert _node_count(df, "Scan parquet") <= 12
+    assert _scores_once(df)
+    df = q("ann_ivf_topk_fixed")
+    assert _node_count(df, "Exchange") <= 1
+    assert _scores_once(df)
+    df = q("dedup_semantic")
+    assert _node_count(df, "SortMergeJoin") == 0
+    assert _scores_once(df)
     df = q("graph_connected_components")
     # the JOIN shape — no sort-merge (the SHJ hints must hold) — and
     # the edge and label exchanges each run once
@@ -117,6 +130,15 @@ def test_fused_shapes_pinned(spark, sf_dir):
     df = q("dedup_allpairs_canonical")
     assert _node_count(df, "Sort ") <= 3
     assert _run_exchanges(df) <= 11
+
+
+def _scores_once(df):
+    """No join condition of the static plan evaluates a higher-order
+    ``transform`` (the per-centroid scores)."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    return not any(ln.startswith("Join condition") and "transform(" in ln
+                   for ln in text.splitlines())
 
 
 def _run_exchanges(df):
